@@ -3599,42 +3599,22 @@ object AnalyticsQueries {
 
   /** The day-partitioned cents-histogram artifact shared by the drift
     * panel's artifact consumers (q112 KS, q114 AUC): built ONCE behind
-    * [[graft.etl.Stages.stage]]'s `_SUCCESS` commit protocol (d23's
+    * [[graft.etl.Stages.shared]] over the EVENTS table (d23's
     * span-frame regime) — a second panel read serves the committed
-    * kilobyte parquet without re-aggregating the event log; with
-    * [[StageRoots.durableBase]] set the stage name carries the EVENTS
-    * content digest, so a nightly over unchanged events reads last
-    * night's artifact and any event change rebuilds by construction.
+    * kilobyte parquet without re-aggregating the event log; under a
+    * durable root a nightly over unchanged events reads last night's
+    * artifact and any event change rebuilds by construction.
     * Written `partitionBy(day)` so day-window filters prune files. */
-  private[graft] def ksHistArtifact(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.SketchStore
-    def build: DataFrame = SketchStore.histogramFrame(
-      Tables.events(spark, dir)
-        .select(to_date(col("ts")).as("day"), col("event_type"),
-          expr("cast(round(value * 100, 0) as bigint)").as("cents"))
-        .filter(col("day").isNotNull),
-      Seq("day", "event_type"), col("cents"), 0)
-    StageRoots.durableRootFor(dir) match {
-      case Some(root) =>
-        val dig = evDigestCache.computeIfAbsent(root, _ =>
-          etl.Stages.contentDigest(Tables.events(spark, dir)
-            .select("event_id", "ts", "event_type", "value")))
-        etl.Stages.stageDurable(spark, root, "ks_hists", dig,
-          partitionCols = Seq("day"))(build)
-      case None =>
-        etl.Stages.stage(spark, StageRoots.rootFor(dir), "ks_hists",
-          partitionCols = Seq("day"))(build)
+  private[graft] def ksHistArtifact(spark: SparkSession, dir: String): DataFrame =
+    etl.Stages.shared(spark, dir, "events", "ks_hists",
+        partitionCols = Seq("day")) {
+      graft.sources.SketchStore.histogramFrame(
+        Tables.events(spark, dir)
+          .select(to_date(col("ts")).as("day"), col("event_type"),
+            expr("cast(round(value * 100, 0) as bigint)").as("cents"))
+          .filter(col("day").isNotNull),
+        Seq("day", "event_type"), col("cents"), 0)
     }
-  }
-  /** Events content digest per durable root, computed once per JVM —
-    * the [[LlmQueries]] corpus-digest convention: a long-lived service
-    * whose events table is re-ingested in place picks the new digest
-    * up on restart, or via [[clearEvDigestCache]] (the same remedy as
-    * LlmQueries.clearDigestCache — without it the stale digest would
-    * address last ingest's artifact forever). */
-  private val evDigestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def clearEvDigestCache(): Unit = evDigestCache.clear()
 
   /** #291 (q112): KS drift between day ranges from PERSISTED
     * histograms — q111's audit served from the day-partitioned value

@@ -1,24 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** ONE definition of the bench session + env bootstrap, shared with
-    * [[graft.streaming.StreamBench.main]] — a config flag applied in
-    * only one of the two mains would silently benchmark the stream
-    * lines under a different session than the suite they're read
-    * against. */
+  /** The bench session ([[GraftSession.local]]) + dataset dir, shared
+    * with [[graft.streaming.StreamBench.main]]. */
   private[graft] def session(): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    (spark, sfDir)
+    (GraftSession.local(), sfDir)
   }
 
   def main(args: Array[String]): Unit = {
@@ -90,7 +77,7 @@ object Bench {
         // this the whole build cost lands on the alphabetically-first
         // consumer (d04 read as 5.2 s when the PPJoin itself is ~1 s;
         // d26 as 7.8 s vs 3.7 s steady-state), so consumer regressions
-        // were not attributable. Stages.stage is eager — constructing
+        // were not attributable. Stages.shared is eager — constructing
         // the frame runs the build and commits the parquet; the noop
         // write adds the staged-read cost so the line prices the whole
         // artifact turnaround. Under a name filter, only explicitly

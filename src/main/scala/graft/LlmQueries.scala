@@ -193,21 +193,6 @@ object LlmQueries {
   def d04NgramJaccard: Q = (spark, dir) =>
     pairGraph(spark, dir).orderBy("doc_id1", "doc_id2")
 
-  /** The exact-jaccard near-dup pair graph as a staged artifact
-    * ([[etl.Stages]], `_SUCCESS`-gated parquet under
-    * [[StageRoots.rootFor]]): the single most expensive shared
-    * computation in the corpus pipeline, consumed by FIVE operators
-    * (d04 output, d06 components, d14 pagerank, d15 canonical pick,
-    * d16 triangles) plus t23's split via [[clusters]]. Built once per
-    * run; every consumer reads the materialized parquet instead of
-    * re-running the set-sim join — at 100 TB that recompute is hours
-    * per consumer, and the staged read also replaces the
-    * `localCheckpoint` lineage barriers the graph consumers carried.
-    *
-    * NOTE the staging contract: if the artifact is uncommitted,
-    * CONSTRUCTING a consumer's DataFrame runs the build job and
-    * writes the stage (Stages.stage is eager by design — EtlSpec);
-    * every later construction is a parquet read. */
   /** Shingle sets as 64-bit fingerprints (1:1 with the oracle's
     * string shingles — each is a hash of the same contiguous byte
     * range), so |∩| and |∪| are identical while all joins compare
@@ -218,51 +203,23 @@ object LlmQueries {
         array_distinct(MinHash.shingleHashes(col("text_norm"), 3)).as("s"))
       .repartition(col("doc_id"))
 
-  /** One corpus content digest per (dataset, JVM): the durable-stage
-    * staleness key ([[etl.Stages.stageDurable]]) costs one scan of
-    * (doc_id, text); within a run the corpus is immutable (the same
-    * assumption the per-JVM roots already make), so the scan is paid
-    * once, not per consumer. A long-lived service picks up corpus
-    * changes on restart — or via [[clearDigestCache]]. */
-  private val digestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def clearDigestCache(): Unit = digestCache.clear()
-
-  /** Stage a shared corpus intermediate: per-JVM fresh root by default;
-    * with [[StageRoots.durableBase]] set, cross-run durable under a
-    * corpus-digest-guarded name — an unchanged corpus is served from
-    * the previous run's artifact, any change rebuilds by construction. */
-  private def sharedStage(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    StageRoots.durableRootFor(dir) match {
-      case Some(root) =>
-        val dig = digestCache.computeIfAbsent(root, _ =>
-          etl.Stages.contentDigest(
-            Tables.documents(spark, dir).select("doc_id", "text")))
-        etl.Stages.stageDurable(spark, root, name, dig)(build)
-      case None =>
-        etl.Stages.stage(spark, StageRoots.rootFor(dir), name)(build)
-    }
-
-  /** [[sharedStage]] for artifacts derived from the EMBEDDINGS table:
-    * the durable-root staleness digest must hash the table the
-    * artifact is a function of — reusing the documents digest would
-    * serve a stale embedding artifact across runs whenever only the
-    * embeddings change. */
-  private def sharedEmbStage(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    StageRoots.durableRootFor(dir) match {
-      case Some(root) =>
-        val dig = digestCache.computeIfAbsent(s"$root#emb", _ =>
-          etl.Stages.contentDigest(
-            Tables.embeddings(spark, dir).select("vec_id", "embedding")))
-        etl.Stages.stageDurable(spark, root, name, dig)(build)
-      case None =>
-        etl.Stages.stage(spark, StageRoots.rootFor(dir), name)(build)
-    }
-
+  /** The exact-jaccard near-dup pair graph as a staged artifact
+    * ([[etl.Stages.shared]] over `documents`, `_SUCCESS`-gated
+    * parquet): the single most expensive shared computation in the
+    * corpus pipeline, consumed by FIVE operators
+    * (d04 output, d06 components, d14 pagerank, d15 canonical pick,
+    * d16 triangles) plus t23's split via [[clusters]]. Built once per
+    * run; every consumer reads the materialized parquet instead of
+    * re-running the set-sim join — at 100 TB that recompute is hours
+    * per consumer, and the staged read also replaces the
+    * `localCheckpoint` lineage barriers the graph consumers carried.
+    *
+    * NOTE the staging contract: if the artifact is uncommitted,
+    * CONSTRUCTING a consumer's DataFrame runs the build job and
+    * writes the stage (Stages.shared is eager by design — EtlSpec);
+    * every later construction is a parquet read. */
   private[graft] def pairGraph(spark: SparkSession, dir: String): DataFrame =
-    sharedStage(spark, dir, "neardup_pairs") {
+    etl.Stages.shared(spark, dir, "documents", "neardup_pairs") {
       SetSimJoin.jaccardSelfJoin(shingleSets(spark, dir), "doc_id", "s",
           tauNum = 1, tauDen = 2)
         .select(col("id1").as("doc_id1"), col("id2").as("doc_id2"),
@@ -942,7 +899,7 @@ object LlmQueries {
     * recursive-CTE component computations, the tight one over pairs
     * filtered at exact jaccard ≥ 0.7. */
   def d37ClusterRecut: Q = (spark, dir) => {
-    val tight = sharedStage(spark, dir, "dedup_clusters_tight") {
+    val tight = etl.Stages.shared(spark, dir, "documents", "dedup_clusters_tight") {
       val edges = pairGraph(spark, dir)
         .filter(col("inter") * 10 >= col("uni") * 7)
         .select("doc_id1", "doc_id2")
@@ -1118,7 +1075,7 @@ object LlmQueries {
     * leakage-safe split, so the split consumes a `_SUCCESS`-gated
     * parquet instead of re-deriving pairs + components inline. */
   private[graft] def clusters(spark: SparkSession, dir: String): DataFrame =
-    sharedStage(spark, dir, "dedup_clusters") {
+    etl.Stages.shared(spark, dir, "documents", "dedup_clusters") {
       val edges = pairGraph(spark, dir).select("doc_id1", "doc_id2")
       ConnectedComponents.run(edges, idCols = ("doc_id1", "doc_id2"))
     }
@@ -2435,7 +2392,7 @@ object LlmQueries {
     * MultimodalSpec's codec pins are untouched and the m04/m05 query
     * contracts are unchanged. */
   private[graft] def rasterFrame(spark: SparkSession, dir: String): DataFrame =
-    sharedStage(spark, dir, "rasters") {
+    etl.Stages.shared(spark, dir, "documents", "rasters") {
       import graft.multimodal.Codecs
       import spark.implicits._
       normedDocs(spark, dir)
@@ -2660,7 +2617,7 @@ object LlmQueries {
     * (≥ 1 s per consumer at sf0.1, the whole lineitem pass at 100 TB).
     * Bench prices the build as its own `stage:copurchase` line. */
   private[graft] def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    sharedStage(spark, dir, "copurchase_edges") {
+    etl.Stages.shared(spark, dir, "lineitem", "copurchase_edges") {
       val ed = Tables.lineitem(spark, dir)
         .select("l_orderkey", "l_partkey").distinct()
       ed.as("x").join(ed.as("y"),
@@ -2890,21 +2847,21 @@ object LlmQueries {
     * never from a second raw-corpus pass. Corpus membership here is
     * d24's deterministic convention (even doc_id). */
   private[graft] def gateCorpusSets(spark: SparkSession, dir: String): DataFrame =
-    sharedStage(spark, dir, "gate_corpus_sets") {
+    etl.Stages.shared(spark, dir, "documents", "gate_corpus_sets") {
       normedDocs(spark, dir).filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), md5(col("text_norm")).as("dig"),
           array_distinct(MinHash.shingleHashes(col("text_norm"), 3)).as("s"))
     }
 
   private[graft] def gateCorpusDf(spark: SparkSession, dir: String): DataFrame =
-    sharedStage(spark, dir, "gate_corpus_df") {
+    etl.Stages.shared(spark, dir, "documents", "gate_corpus_df") {
       gateCorpusSets(spark, dir).select(explode(col("s")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("df"))
     }
 
   private[graft] def gateCorpusPostings(spark: SparkSession,
                                         dir: String): DataFrame =
-    sharedStage(spark, dir, "gate_corpus_postings") {
+    etl.Stages.shared(spark, dir, "documents", "gate_corpus_postings") {
       SetSimJoin.containmentPostings(gateCorpusSets(spark, dir), "doc_id", "s",
         gateCorpusDf(spark, dir))
     }
@@ -3004,12 +2961,13 @@ object LlmQueries {
     * d33 transitively through d32), so the inline form re-ran the
     * two-count-window span pipeline five times per suite run — at
     * 100 TB five corpus-scale passes where one staged read suffices.
-    * Same [[sharedStage]] contract as the pair graph / cluster table:
-    * built once per (JVM, dataset), `_SUCCESS`-gated, durable-root +
-    * corpus-digest aware. In production this artifact IS the cleaned
-    * corpus, which a pipeline persists anyway. */
+    * Same [[etl.Stages.shared]] contract as the pair graph / cluster
+    * table: built once per (JVM, dataset), `_SUCCESS`-gated, and under
+    * a durable root guarded by the `documents` digest. In production
+    * this artifact IS the cleaned corpus, which a pipeline persists
+    * anyway. */
   private[graft] def dupSpanFrame(spark: SparkSession, dir: String): DataFrame =
-    sharedStage(spark, dir, "dup_spans") {
+    etl.Stages.shared(spark, dir, "documents", "dup_spans") {
       val n = 8
       val toks = normedDocs(spark, dir)
         .select(col("doc_id"), split(col("text_norm"), " ").as("w"))
@@ -3601,12 +3559,11 @@ object LlmQueries {
     * consumer reads parquet; pricing the n^1.5 cell self-join inside
     * each consumer re-derives that dominant cost per consumer (the
     * r14 ledger read s27-with-inline-build at 79 s/sf1 where the
-    * census itself is graph-linear). Digest-guarded on the
-    * EMBEDDINGS table under durable roots — the other shared stages
-    * digest documents, which would serve a stale graph when only
-    * embeddings change. */
+    * census itself is graph-linear). Staged through
+    * [[etl.Stages.shared]] over the EMBEDDINGS table, so under a
+    * durable root an embeddings change rebuilds the graph. */
   private[graft] def knnGraphFrame(spark: SparkSession, dir: String): DataFrame =
-    sharedEmbStage(spark, dir, "knn_graph") {
+    etl.Stages.shared(spark, dir, "embeddings", "knn_graph") {
       val e = Tables.embeddings(spark, dir)
         .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
       Ann.knnGraph(e, k = 5, seed = 42L)

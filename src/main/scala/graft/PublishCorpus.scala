@@ -55,14 +55,10 @@ object PublishCorpus {
 
   import graft.text.TextFunctions.whitespaceTokenCount
 
-  private def stage(spark: SparkSession, root: String, name: String)(
-      build: => DataFrame): DataFrame =
-    etl.Stages.stage(spark, root, name)(build)
-
   /** Stage 1: (doc_id, root, split) — t23's cluster-rooted split. */
   private[graft] def splitFrame(spark: SparkSession, dir: String,
                                 stageRoot: String): DataFrame =
-    stage(spark, stageRoot, "pub_split") {
+    etl.Stages.stage(spark, stageRoot, "pub_split") {
       TrainingDataQueries.t23LeakageSafeSplit(spark, dir)
     }
 
@@ -70,7 +66,7 @@ object PublishCorpus {
     * md5(text)) with payload + token census. */
   private[graft] def keptFrame(spark: SparkSession, dir: String,
                                stageRoot: String): DataFrame =
-    stage(spark, stageRoot, "pub_kept") {
+    etl.Stages.stage(spark, stageRoot, "pub_kept") {
       etl.Dedup.topPerKey(
           Tables.documents(spark, dir)
             .select(col("doc_id"), col("source"), col("text"))
@@ -93,7 +89,7 @@ object PublishCorpus {
                                tokenBudget: Long): DataFrame =
     // the budget is part of the stage IDENTITY: a warm root re-run at
     // a different budget must rebuild, not serve the stale cut
-    stage(spark, stageRoot, s"pub_plan_b$tokenBudget") {
+    etl.Stages.stage(spark, stageRoot, s"pub_plan_b$tokenBudget") {
       val kept = keptFrame(spark, dir, stageRoot)
         .join(splitFrame(spark, dir, stageRoot).select("doc_id", "split"),
           "doc_id")
@@ -118,7 +114,7 @@ object PublishCorpus {
     * decisions). */
   private[graft] def datasheetFrame(spark: SparkSession, dir: String,
                                     stageRoot: String): DataFrame =
-    stage(spark, stageRoot, "pub_datasheet") {
+    etl.Stages.stage(spark, stageRoot, "pub_datasheet") {
       val in = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"),
           whitespaceTokenCount(col("text")).as("n_tok_in"))

@@ -1,7 +1,7 @@
 package graft
 
-/** Per-JVM roots for [[etl.Stages]]-materialized intermediates that are
-  * shared across queries in one run (the near-dup pair graph and its
+/** Roots for the intermediates [[etl.Stages.shared]] materializes for
+  * queries that share them in one run (the near-dup pair graph and its
   * cluster table feed five operators each — re-deriving them per query
   * was the round-6 judge's top staging nit; at 100 TB that recompute is
   * hours per consumer).
@@ -9,10 +9,7 @@ package graft
   * The base directory is created fresh per JVM: a Verify or Bench run
   * shares one build across all its queries, while a NEW run (possibly
   * against regenerated testdata) can never serve a stale artifact from
-  * a previous process. A production deployment with a durable lake
-  * would pass its own root straight to [[etl.Stages.stage]] — this
-  * object is the freshness-over-reuse policy for the driver contract,
-  * not the only way to stage.
+  * a previous process. Cross-run reuse is the opt-in [[durableBase]].
   */
 object StageRoots {
   @volatile private var base: String = newBase()
@@ -44,14 +41,13 @@ object StageRoots {
 
   /** Opt-in durable stage base for CROSS-RUN artifact reuse: set the
     * system property `graft.stages.durableRoot` (or env
-    * `GRAFT_STAGE_ROOT`) to a lake path and the shared intermediates
-    * (near-dup pair graph, cluster table) stage under
-    * `<base>/<datasetKey>` with a corpus content digest in the stage
-    * name ([[graft.etl.Stages.stageDurable]]) — a nightly over an
-    * unchanged corpus reads the previous run's artifact instead of
-    * rebuilding it, and any corpus change rebuilds by construction.
-    * Unset (the default), roots are per-JVM and freshness needs no
-    * digest at all. */
+    * `GRAFT_STAGE_ROOT`) to a lake path and every
+    * [[graft.etl.Stages.shared]] artifact stages under
+    * `<base>/<datasetKey>` with its source table's content digest in
+    * the stage name — a nightly over an unchanged table reads the
+    * previous run's artifact instead of rebuilding it, and any change
+    * to that table rebuilds by construction. Unset (the default),
+    * roots are per-JVM and freshness needs no digest at all. */
   def durableBase: Option[String] =
     sys.props.get("graft.stages.durableRoot")
       .orElse(sys.env.get("GRAFT_STAGE_ROOT"))

@@ -15,6 +15,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   /** Every table loader normalizes TIMESTAMP_NTZ columns to
     * session-local TimestampType (exact under the pinned UTC session
     * TZ): pandas writes parquet timestamps with isAdjustedToUTC=false
@@ -25,7 +27,7 @@ object Tables {
     * columns can never hit the NTZ-rejecting functions
     * (`unix_micros`, typed timestamp comparisons) at analysis. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = spark.read.parquet(path(dir, name))
     val ntzCols = raw.schema.fields.collect {
       case f if f.dataType.isInstanceOf[TimestampNTZType] => f.name
     }

@@ -1,7 +1,9 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.{StageRoots, Tables}
 
 /** Staged checkpoints for multi-hour pipelines — the restart story the
   * reference gets from Airflow task boundaries (extract → transform →
@@ -21,6 +23,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Stages {
 
+  /** Abandoned temp dirs younger than this are left alone by the
+    * winner's sweep: a CONCURRENT racer's build dir is live and
+    * actively written — deleting it would fail the racer's parquet
+    * job with task errors instead of the documented "loser serves the
+    * winner's output". Debris from genuinely killed runs ages past
+    * this and gets cleaned by the next winner. */
+  private val SweepMinAgeMs: Long = 24L * 60 * 60 * 1000
+
+  /** Sweep cutoff: anything under `root` older than this may go. "Now"
+    * comes from the FILESYSTEM's clock (mtime of a freshly-touched
+    * marker), not this JVM's: on object stores or skewed hosts,
+    * System.currentTimeMillis() would silently shrink the 24h margin
+    * and could sweep a live racer's tmp. */
+  private def sweepCutoff(fs: FileSystem, root: String, name: String): Long = {
+    val clockMarker = new Path(root,
+      s".$name.sweepclock-${java.util.UUID.randomUUID}")
+    val fsNow =
+      try {
+        fs.create(clockMarker, true).close()
+        fs.getFileStatus(clockMarker).getModificationTime
+      } finally fs.delete(clockMarker, false)
+    fsNow - SweepMinAgeMs
+  }
+
   /** Serve `name` from `root` if committed, else build → write → read
     * back. The returned frame always reads from the materialized
     * parquet, so every consumer shares one copy of the work.
@@ -33,16 +59,9 @@ object Stages {
     * build, but the loser's rename fails against the winner's committed
     * directory and it serves the winner's output instead of mixing
     * files. (One writer per (root, name) is still the intended
-    * deployment — the race tolerance is a safety net, not a scheduler.) */
-  /** Abandoned temp dirs younger than this are left alone by the
-    * winner's sweep: a CONCURRENT racer's build dir is live and
-    * actively written — deleting it would fail the racer's parquet
-    * job with task errors instead of the documented "loser serves the
-    * winner's output". Debris from genuinely killed runs ages past
-    * this and gets cleaned by the next winner. */
-  private val SweepMinAgeMs: Long = 24L * 60 * 60 * 1000
-
-  /** `partitionCols`: written with `partitionBy` so consumers prune on
+    * deployment — the race tolerance is a safety net, not a scheduler.)
+    *
+    * `partitionCols`: written with `partitionBy` so consumers prune on
     * the partition axis (the day-partitioned drift histograms) —
     * commit protocol unchanged (partitioned writes still emit one
     * root-level `_SUCCESS`). */
@@ -78,19 +97,8 @@ object Stages {
         if (committed) {
           // winner sweeps temp dirs abandoned by KILLED runs — never a
           // concurrent racer's live build (age gate, see SweepMinAgeMs;
-          // our own tmp is already gone via the rename). "Now" comes
-          // from the FILESYSTEM's clock (mtime of a freshly-touched
-          // marker), not the driver's: on object stores or skewed
-          // hosts, System.currentTimeMillis() would silently shrink
-          // the 24h margin and could sweep a live racer's tmp.
-          val clockMarker = new Path(root,
-            s".$name.sweepclock-${java.util.UUID.randomUUID}")
-          val fsNow =
-            try {
-              fs.create(clockMarker, true).close()
-              fs.getFileStatus(clockMarker).getModificationTime
-            } finally fs.delete(clockMarker, false)
-          val cutoff = fsNow - SweepMinAgeMs
+          // our own tmp is already gone via the rename)
+          val cutoff = sweepCutoff(fs, root, name)
           Option(fs.globStatus(new Path(root, s".$name.inprogress-*")))
             .foreach(_.filter(_.getModificationTime < cutoff)
               .foreach(st => fs.delete(st.getPath, true)))
@@ -161,14 +169,7 @@ object Stages {
     try {
       val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val clockMarker = new Path(root,
-        s".$name.sweepclock-${java.util.UUID.randomUUID}")
-      val fsNow =
-        try {
-          fs.create(clockMarker, true).close()
-          fs.getFileStatus(clockMarker).getModificationTime
-        } finally fs.delete(clockMarker, false)
-      val cutoff = fsNow - SweepMinAgeMs
+      val cutoff = sweepCutoff(fs, root, name)
       Option(fs.globStatus(new Path(root, s"$name-*")))
         .foreach(_.filter { st =>
           st.getPath.getName != s"$name-$digest" &&
@@ -176,5 +177,55 @@ object Stages {
         }.foreach(st => fs.delete(st.getPath, true)))
     } catch { case scala.util.control.NonFatal(_) => () } // sweep is best-effort
     out
+  }
+
+  /** The one staging entry point for dataset-derived artifacts shared
+    * across queries (the near-dup pair graph, its cluster tables, the
+    * d23 span frame, the k-NN graph, the drift histograms, …). `source`
+    * is the [[graft.Tables]] table the artifact is a function of.
+    *
+    * By default the artifact is staged per JVM under
+    * [[graft.StageRoots.rootFor]]: a run shares one build across its
+    * consumers and a new process can never serve an old one, so no
+    * digest and no file listing is needed. With
+    * [[graft.StageRoots.durableBase]] set it is [[stageDurable]] under
+    * the durable root, guarded by the content digest of the WHOLE
+    * source table — a nightly over an unchanged table reads the last
+    * run's artifact, any change to that table rebuilds. */
+  def shared(spark: SparkSession, dir: String, source: String, name: String,
+             partitionCols: Seq[String] = Nil)
+            (build: => DataFrame): DataFrame = {
+    require(Tables.names.contains(source), s"unknown source table '$source'")
+    StageRoots.durableRootFor(dir) match {
+      case None =>
+        stage(spark, StageRoots.rootFor(dir), name, partitionCols)(build)
+      case Some(root) =>
+        stageDurable(spark, root, name, sourceDigest(spark, dir, source),
+          partitionCols)(build)
+    }
+  }
+
+  /** Source-table digests by table path, each with the file snapshot
+    * (names, sizes, mtimes) it was computed over: a hit needs the same
+    * snapshot, so a table rewritten in place within a live session is
+    * re-digested on its next use — no clear hook. The listing is
+    * metadata-only; the digest scan runs once per table version. */
+  private val digests =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], String)]()
+
+  private def sourceDigest(spark: SparkSession, dir: String,
+                           source: String): String = {
+    val path = new Path(Tables.path(dir, source))
+    val it = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(path, true)
+    val snapshot = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .toSeq.sorted
+    Option(digests.get(path.toString)).filter(_._1 == snapshot).map(_._2)
+      .getOrElse {
+        val d = contentDigest(Tables(spark, dir, source))
+        digests.put(path.toString, (snapshot, d))
+        d
+      }
   }
 }

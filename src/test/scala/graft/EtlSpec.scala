@@ -121,7 +121,6 @@ class EtlSpec extends AnyFunSuite {
   test("durable pair-graph wiring: second run reuses the committed artifact") {
     val root = java.nio.file.Files.createTempDirectory("graft_dur_wire").toString
     System.setProperty("graft.stages.durableRoot", root)
-    LlmQueries.clearDigestCache()
     try {
       assert(LlmQueries.pairGraph(spark, TestSpark.Sf).count() > 0)
       val dsDir = new java.io.File(root).listFiles.filter(_.isDirectory)
@@ -134,19 +133,14 @@ class EtlSpec extends AnyFunSuite {
       val mtime = marker.lastModified()
       // simulated second run: digest recomputed from the (unchanged)
       // corpus must address the SAME committed dir — served, not rebuilt
-      LlmQueries.clearDigestCache()
       assert(LlmQueries.pairGraph(spark, TestSpark.Sf).count() > 0)
       assert(marker.lastModified() == mtime, "artifact was rebuilt, not reused")
-    } finally {
-      System.clearProperty("graft.stages.durableRoot")
-      LlmQueries.clearDigestCache()
-    }
+    } finally System.clearProperty("graft.stages.durableRoot")
   }
 
   test("durable drift-histogram wiring: second run reuses the committed artifact") {
     val root = java.nio.file.Files.createTempDirectory("graft_dur_ks").toString
     System.setProperty("graft.stages.durableRoot", root)
-    AnalyticsQueries.clearEvDigestCache()
     try {
       assert(AnalyticsQueries.q112KsFromArtifacts(spark, TestSpark.Sf).count() > 0)
       val dsDir = new java.io.File(root).listFiles.filter(_.isDirectory)
@@ -159,13 +153,84 @@ class EtlSpec extends AnyFunSuite {
       val mtime = marker.lastModified()
       // simulated second run (fresh digest over unchanged events) — and
       // the SIBLING consumer: both must read the same committed artifact
-      AnalyticsQueries.clearEvDigestCache()
       assert(AnalyticsQueries.q114AucFromArtifacts(spark, TestSpark.Sf).count() > 0)
       assert(marker.lastModified() == mtime, "artifact was rebuilt, not reused")
-    } finally {
-      System.clearProperty("graft.stages.durableRoot")
-      AnalyticsQueries.clearEvDigestCache()
+    } finally System.clearProperty("graft.stages.durableRoot")
+  }
+
+  /** A writable copy of the test dataset, so a test can rewrite a table. */
+  private def copyOfSf(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    Tables.names.foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(Tables.path(TestSpark.Sf, t)),
+        java.nio.file.Paths.get(Tables.path(dir.toString, t)))
     }
+    dir.toString
+  }
+
+  /** Replace `table` under `dir` in place with `df` (which may read it). */
+  private def rewriteTable(dir: String, table: String,
+                           df: org.apache.spark.sql.DataFrame): Unit = {
+    val tmp = s"$dir/.$table.rewrite"
+    df.write.parquet(tmp)
+    val target = new java.io.File(Tables.path(dir, table))
+    assert(target.delete(), s"could not remove $target")
+    assert(new java.io.File(tmp).renameTo(target))
+  }
+
+  private def stageDirs(root: String, name: String): Seq[java.io.File] =
+    new java.io.File(root).listFiles.filter(_.isDirectory).toSeq
+      .flatMap(_.listFiles.filter(f => f.isDirectory && f.getName.startsWith(s"$name-")))
+
+  test("durable copurchase edges digest lineitem: a changed order rebuilds them") {
+    val data = copyOfSf("graft_dur_li_data")
+    val root = java.nio.file.Files.createTempDirectory("graft_dur_li").toString
+    System.setProperty("graft.stages.durableRoot", root)
+    try {
+      def edges = LlmQueries.coPurchaseEdges(spark, data)
+        .as[(Long, Long)].collect().toSet
+      val before = edges
+      assert(before.nonEmpty && stageDirs(root, "copurchase_edges").length == 1)
+      // drop one order that supports an edge at exactly the support
+      // floor (2 orders): that edge must disappear
+      val li = Tables.lineitem(spark, data)
+      val ed = li.select("l_orderkey", "l_partkey").distinct()
+      val order = ed.as("x").join(ed.as("y"),
+          $"x.l_orderkey" === $"y.l_orderkey" && $"x.l_partkey" < $"y.l_partkey")
+        .groupBy($"x.l_partkey".as("a"), $"y.l_partkey".as("b"))
+        .agg(count(lit(1)).as("n"), min($"x.l_orderkey").as("o"))
+        .filter($"n" === 2).orderBy("a", "b").select("o").as[Long].head()
+      rewriteTable(data, "lineitem", li.filter($"l_orderkey" =!= order))
+      val after = edges
+      assert(stageDirs(root, "copurchase_edges").length == 2,
+        "a lineitem change must rebuild the edges under a new digest")
+      assert(after != before && after.subsetOf(before))
+    } finally System.clearProperty("graft.stages.durableRoot")
+  }
+
+  test("durable pair graph: an in-place documents rewrite rebuilds it in the same session") {
+    val data = copyOfSf("graft_dur_doc_data")
+    val root = java.nio.file.Files.createTempDirectory("graft_dur_doc").toString
+    System.setProperty("graft.stages.durableRoot", root)
+    try {
+      def pairs = LlmQueries.pairGraph(spark, data)
+        .select("doc_id1", "doc_id2").as[(Long, Long)].collect().toSet
+      val before = pairs
+      assert(stageDirs(root, "neardup_pairs").length == 1)
+      // edit one text: the first doc becomes a copy of the last one,
+      // which makes the two an exact-duplicate pair
+      val docs = Tables.documents(spark, data)
+      val ids = docs.select("doc_id").as[Long].collect().sorted
+      val (x, y) = (ids.head, ids.last)
+      assert(!before.contains((x, y)))
+      val yText = docs.filter($"doc_id" === y).select("text").as[String].head()
+      rewriteTable(data, "documents",
+        docs.withColumn("text", when($"doc_id" === x, lit(yText)).otherwise($"text")))
+      val after = pairs
+      assert(stageDirs(root, "neardup_pairs").length == 2,
+        "the rewritten corpus must rebuild the pair graph under a new digest")
+      assert(after.contains((x, y)))
+    } finally System.clearProperty("graft.stages.durableRoot")
   }
 
   test("q70 forget audit matches the physical purge it certifies") {
