@@ -483,48 +483,22 @@ object EventStream {
     * without re-folding, keeping counts exactly-once per batch id. */
   def alphaMixForeachBatch(seed: Map[String, Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
-      onWeights: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val counts = scala.collection.mutable.Map[String, Long](seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
+      onWeights: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    MonitorState.fold[String]("alphaMix", seed, stateDir, maxKeys)(
+      _.groupBy(col("lang"), lit("")).agg(count(lit(1))),
+      _ + _, l => (l, ""), (l, _) => l, onWeights) { (spark, counts) =>
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            counts.clear()
-            rows.foreach { case (l, _, n) => counts(l) = n }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        // LIMIT the collect: the cap must bound what reaches the
-        // driver, not just the map size after an unbounded collect
-        // already landed (the "fail fast" the guard promises)
-        val folded = batch.groupBy("lang").agg(count(lit(1)).as("__graft_n"))
-          .limit(maxKeys + 1).as[(String, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "alphaMix")
-        folded.foreach { case (l, n) => counts(l) = counts.getOrElse(l, 0L) + n }
-        lastBatch = batchId
-        MonitorState.guardBound(counts.size, maxKeys, "alphaMix")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          counts.toSeq.sorted.map { case (l, n) => (l, "", n) }))
-      }
       val rows = counts.toSeq.sortBy(_._1)
       val ntot = rows.map(_._2).sum
       val sRoots = rows.map { case (_, n) =>
         math.floor(math.sqrt((n * 1000000L).toDouble)).toLong }
       val stot = sRoots.sum
-      val out = rows.zip(sRoots).map { case ((l, n), s) =>
+      rows.zip(sRoots).map { case ((l, n), s) =>
         // positive operands: JVM `/` truncation ≡ Spark `div` here
         (l, n, (n * 1000000L * 2 + ntot) / (2 * ntot),
           (s * 1000000L * 2 + stot) / (2 * stot))
       }.toDF("lang", "n_docs", "p_ppm", "q_alpha_ppm")
-      onWeights(out, batchId)
     }
-  }
 
   /** Streaming Benford monitor (#254) — q93's streaming twin: as
     * value facts arrive (any frame with a positive-cents BIGINT
@@ -547,35 +521,14 @@ object EventStream {
     * alphaMix guard). */
   def benfordForeachBatch(seed: Map[Long, Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
-      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val counts = scala.collection.mutable.Map[Long, Long](seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
+      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    MonitorState.fold[Long]("benford", seed, stateDir, maxKeys)(
+      _.filter(col("cents") > 0)
+        .groupBy(substring(col("cents").cast("string"), 1, 1), lit(""))
+        .agg(count(lit(1))),
+      _ + _, d => (d.toString, ""), (d, _) => d.toLong, onReport) {
+      (spark, counts) =>
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            counts.clear()
-            rows.foreach { case (d, _, n) => counts(d.toLong) = n }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch.filter(col("cents") > 0)
-          .select(substring(col("cents").cast("string"), 1, 1)
-            .cast("long").as("digit"))
-          .groupBy("digit").agg(count(lit(1)).as("__graft_n"))
-          .limit(maxKeys + 1).as[(Long, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "benford")
-        folded.foreach { case (d, n) => counts(d) = counts.getOrElse(d, 0L) + n }
-        lastBatch = batchId
-        MonitorState.guardBound(counts.size, maxKeys, "benford")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          counts.toSeq.sorted.map { case (k, n) => (k.toString, "", n) }))
-      }
       val total = counts.values.sum
       val rows = graft.AnalyticsQueries.benfordExpPpm.map { case (d, exp) =>
         val cnt = counts.getOrElse(d, 0L)
@@ -584,13 +537,11 @@ object EventStream {
         (d, cnt, total, obs, exp, math.abs(obs - exp))
       }
       val tv = rows.map(_._6).sum / 2
-      val out = rows
+      rows
         .map { case (d, cnt, n, obs, exp, dev) => (d, cnt, n, obs, exp, dev, tv) }
         .toDF("digit", "cnt", "n_total", "obs_ppm", "exp_ppm", "dev_ppm",
           "tv_ppm")
-      onReport(out, batchId)
     }
-  }
 
   /** Streaming CUSUM monitor (#262) — q99's streaming twin: as value
     * facts arrive (any frame with `event_type` STRING, `day` DATE,
@@ -619,36 +570,10 @@ object EventStream {
     * re-folding (counts are not idempotent). */
   def cusumForeachBatch(seed: Map[(String, String), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
-      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, String), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
+      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    MonitorState.fold[(String, String)]("cusum", seed, stateDir, maxKeys)(
+      dayCells, _ + _, identity, (_, _), onReport) { (spark, cells) =>
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (et, d, c) => cells((et, d)) = c }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch
-          .groupBy(col("event_type"), col("day").cast("string").as("d"))
-          .agg(sum("cents").as("__graft_c"))
-          .limit(maxKeys + 1).as[(String, String, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "cusum")
-        folded.foreach { case (et, d, c) =>
-          cells((et, d)) = cells.getOrElse((et, d), 0L) + c }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "cusum")
-        stateDir.foreach(dir => MonitorState.save(spark, dir, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((et, d), c) => (et, d, c) }))
-      }
       val rows = cells.toSeq.map { case ((et, d), c) => (et, d, c) }
         .groupBy(_._1).toSeq.flatMap { case (et, trs) =>
           val seq = trs.sortBy(_._2)
@@ -665,14 +590,18 @@ object EventStream {
               if (sp > target || sn > target) 1L else 0L)
           }
         }.sortBy(r => (r._1, r._2))
-      val out = rows.toDF("event_type", "d", "cents", "target", "dev",
+      rows.toDF("event_type", "d", "cents", "target", "dev",
           "s_pos", "s_neg", "alarm")
         .withColumn("day", col("d").cast("date"))
         .select("event_type", "day", "cents", "target", "dev", "s_pos",
           "s_neg", "alarm")
-      onReport(out, batchId)
     }
-  }
+
+  /** The (event_type, day) → Σ cents cells one micro-batch adds to the
+    * [[cusumForeachBatch]] / [[controlChartForeachBatch]] histogram. */
+  private def dayCells(batch: DataFrame): DataFrame =
+    batch.groupBy(col("event_type"), col("day").cast("string"))
+      .agg(sum("cents"))
 
   /** Streaming Shewhart control chart (#316) — q122's streaming
     * twin on the [[cusumForeachBatch]] state shape: fold arriving
@@ -695,36 +624,11 @@ object EventStream {
       refEnd: String = graft.AnalyticsQueries.DriftRefEnd,
       seed: Map[(String, String), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
-      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, String), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
+      onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    MonitorState.fold[(String, String)]("control_chart", seed, stateDir,
+      maxKeys)(dayCells, _ + _, identity, (_, _), onReport) {
+      (spark, cells) =>
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (et, d, c) => cells((et, d)) = c }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch
-          .groupBy(col("event_type"), col("day").cast("string").as("d"))
-          .agg(sum("cents").as("__graft_c"))
-          .limit(maxKeys + 1).as[(String, String, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "control_chart")
-        folded.foreach { case (et, d, c) =>
-          cells((et, d)) = cells.getOrElse((et, d), 0L) + c }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "control_chart")
-        stateDir.foreach(dir => MonitorState.save(spark, dir, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((et, d), c) => (et, d, c) }))
-      }
       val rows = cells.toSeq.map { case ((et, d), c) => (et, d, c) }
         .groupBy(_._1).toSeq.flatMap { case (et, trs) =>
           val ref = trs.filter(_._2 <= refEnd).map(_._3)
@@ -745,28 +649,13 @@ object EventStream {
             }
           }
         }.sortBy(r => (r._1, r._2))
-      val out = rows.toDF("event_type", "d", "cents", "n_ref",
+      rows.toDF("event_type", "d", "cents", "n_ref",
           "center_milli", "alarm")
         .withColumn("day", col("d").cast("date"))
         .select("event_type", "day", "cents", "n_ref", "center_milli",
           "alarm")
-      onReport(out, batchId)
     }
-  }
 
-  /** Streaming quality gate (#285) — t45's verdicts as an INGEST
-    * GATE, completing the streaming ingest chain (charset #251 →
-    * media format #267 → quality HERE → near-dup #159): per arriving
-    * doc the three gate bits (Gopher battery, per-language length
-    * band, stopword floor) plus the combined keep verdict, computed
-    * by the SAME shared batch-t45 expressions
-    * ([[graft.TrainingDataQueries.gateVerdicts]]) against a FROZEN
-    * calibration frame (`bands` — yesterday's t12 percentile
-    * artifact: a stream cannot know its own corpus percentiles, so
-    * the gate runs on the last calibrated bands, exactly how a
-    * production filter deploys). Stateless stream-static broadcast
-    * join + projection — no watermark, no state store (the #164
-    * pattern); batch/stream verdict parity is pinned by the spec. */
   /** Streaming DSIR admission gate (#308) — t50's streaming twin: the
     * hashed-feature importance score (Xie et al. NeurIPS 2023 §2.2 —
     * the FIXED-bucket variant exists precisely so the parameter
@@ -793,6 +682,19 @@ object EventStream {
         graft.TrainingDataQueries.dsirFeatureMap(features), buckets)
       .withColumn("keep", (col("weight") >= keepFloor).cast("long"))
 
+  /** Streaming quality gate (#285) — t45's verdicts as an INGEST
+    * GATE, completing the streaming ingest chain (charset #251 →
+    * media format #267 → quality HERE → near-dup #159): per arriving
+    * doc the three gate bits (Gopher battery, per-language length
+    * band, stopword floor) plus the combined keep verdict, computed
+    * by the SAME shared batch-t45 expressions
+    * ([[graft.TrainingDataQueries.gateVerdicts]]) against a FROZEN
+    * calibration frame (`bands` — yesterday's t12 percentile
+    * artifact: a stream cannot know its own corpus percentiles, so
+    * the gate runs on the last calibrated bands, exactly how a
+    * production filter deploys). Stateless stream-static broadcast
+    * join + projection — no watermark, no state store (the #164
+    * pattern); batch/stream verdict parity is pinned by the spec. */
   def qualityGateStream(docs: DataFrame, bands: DataFrame): DataFrame =
     graft.TrainingDataQueries.gateVerdicts(
         docs.join(broadcast(bands), Seq("lang")))
@@ -822,41 +724,17 @@ object EventStream {
       seed: Map[(String, Long), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
       onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, Long), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
     var natNames: Map[Long, String] = null
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
+    MonitorState.fold[(String, Long)]("chiSquare", seed, stateDir, maxKeys)(
+      _.groupBy(col("segment"), col("nationkey").cast("long").cast("string"))
+        .agg(count(lit(1))),
+      _ + _, { case (s, nk) => (s, nk.toString) }, (s, nk) => (s, nk.toLong),
+      onReport) { (spark, cells) =>
       import spark.implicits._
       if (natNames == null)
         natNames = nation
           .select(col("n_nationkey").cast("long"), col("n_name"))
           .as[(Long, String)].collect().toMap
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (s, nk, n) => cells((s, nk.toLong)) = n }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch
-          .groupBy(col("segment"), col("nationkey").cast("long").as("nk"))
-          .agg(count(lit(1)).as("__graft_n"))
-          .limit(maxKeys + 1).as[(String, Long, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "chiSquare")
-        folded.foreach { case (s, nk, n) =>
-          cells((s, nk)) = cells.getOrElse((s, nk), 0L) + n }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "chiSquare")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((s, nk), n) =>
-            (s, nk.toString, n) }))
-      }
       // batch q104's integer rules over the cell histogram
       val o = cells.toSeq.map { case ((s, nk), n) => (s, nk, BigInt(n)) }
       val n = o.map(_._3).sum
@@ -873,8 +751,8 @@ object EventStream {
         (s, natNames(t), ob.toLong, e.toLong, (ob * 1000 - e).toLong,
           chi2.toLong, dof)
       }.sortBy(r => (r._1, r._2))
-      onReport(rows.toDF("segment", "nation", "n_obs", "e_milli",
-        "dev_milli", "chi2_e6", "dof"), batchId)
+      rows.toDF("segment", "nation", "n_obs", "e_milli", "dev_milli",
+        "chi2_e6", "dof")
     }
   }
 
@@ -902,38 +780,13 @@ object EventStream {
     * (spec-pinned); `seed` is the cold-start fallback. */
   def skylineForeachBatch(seed: Map[(String, Long), Long] = Map.empty,
       stateDir: Option[String] = None, maxKeys: Int = 65536)(
-      onFrontier: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cells = scala.collection.mutable.Map[(String, Long), Long](
-      seed.toSeq: _*)
-    var lastBatch = -1L
-    var recovered = stateDir.isEmpty
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
+      onFrontier: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    MonitorState.fold[(String, Long)]("skyline", seed, stateDir, maxKeys)(
+      _.groupBy(col("brand"), col("price_cents").cast("string"))
+        .agg(min("size")),
+      math.min, { case (b, p) => (b, p.toString) }, (b, p) => (b, p.toLong),
+      onFrontier) { (spark, cells) =>
       import spark.implicits._
-      if (!recovered) {
-        MonitorState.recover(spark, stateDir.get, batchId).foreach {
-          case (v, rows) =>
-            cells.clear()
-            rows.foreach { case (b, p, s) => cells((b, p.toLong)) = s }
-            lastBatch = v
-        }
-        recovered = true
-      }
-      if (batchId > lastBatch) {
-        val folded = batch.groupBy(col("brand"), col("price_cents"))
-          .agg(min("size").as("__graft_s"))
-          .limit(maxKeys + 1).as[(String, Long, Long)].collect()
-        MonitorState.guardBound(folded.length, maxKeys, "skyline")
-        folded.foreach { case (b, p, s) =>
-          val k = (b, p)
-          cells(k) = cells.get(k).fold(s)(math.min(_, s))
-        }
-        lastBatch = batchId
-        MonitorState.guardBound(cells.size, maxKeys, "skyline")
-        stateDir.foreach(d => MonitorState.save(spark, d, batchId,
-          cells.toSeq.sortBy(_._1).map { case ((b, p), s) =>
-            (b, p.toString, s) }))
-      }
       // frontier from the histogram: ascending price, strict prefix-min
       val rows = cells.toSeq.map { case ((b, p), s) => (b, p, s) }
         .groupBy(_._1).toSeq.flatMap { case (b, pts) =>
@@ -942,9 +795,8 @@ object EventStream {
             if (s < best) { best = s; Some((b, p, s)) } else None
           }
         }.sortBy(r => (r._1, r._2))
-      onFrontier(rows.toDF("brand", "price_cents", "size"), batchId)
+      rows.toDF("brand", "price_cents", "size")
     }
-  }
 
   /** Streaming FK-orphan gate (#259) — q97's streaming twin, run as a
     * GATE rather than a post-hoc audit: every arriving child row is
@@ -1031,15 +883,28 @@ object EventStream {
     * state halves are `_SUCCESS`-gated and versioned by batch id,
     * and the first invocation after a JVM restart adopts the highest
     * fully-committed version — exactly the moment Structured
-    * Streaming redelivers the last uncommitted batch. Replayed batch
-    * ids re-emit from current state without re-folding. */
+    * Streaming redelivers the last uncommitted batch, with the
+    * [[MonitorState]] gap guards (a large id gap either way fails
+    * loudly). Replayed batch ids re-emit from current state without
+    * re-folding. */
   def kanonForeachBatch(stateDir: String, nation: DataFrame)(
       onReport: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     val grpCounts = scala.collection.mutable.Map.empty[(String, Long), Long]
     var triDir: Option[String] = None
     var lastBatch = -1L
-    var recovered = false
     var natNames: Map[Long, String] = null
+    // post-restart resume: adopt the highest version whose triple
+    // state AND group histogram both committed (a crash between
+    // the two writes falls back to the previous version, and the
+    // redelivered batch re-folds — convergent either way)
+    val recover = MonitorState.recovery(stateDir, "grp_") { (spark, v) =>
+      import spark.implicits._
+      triDir = Some(s"$stateDir/v$v")
+      lastBatch = v
+      spark.read.parquet(s"$stateDir/grp_v$v")
+        .as[(String, Long, Long)].collect()
+        .foreach { case (s, nk, n) => grpCounts((s, nk)) = n }
+    }
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
       import spark.implicits._
@@ -1047,31 +912,7 @@ object EventStream {
         natNames = nation
           .select(col("n_nationkey").cast("long"), col("n_name"))
           .as[(Long, String)].collect().toMap
-      if (!recovered) {
-        // post-restart resume: adopt the highest version whose triple
-        // state AND group histogram both committed (a crash between
-        // the two writes falls back to the previous version, and the
-        // redelivered batch re-folds — convergent either way)
-        val root = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) {
-          val committed = fs.listStatus(root).map(_.getPath.getName)
-            .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-            .filter { v =>
-              fs.exists(new org.apache.hadoop.fs.Path(root, s"v$v/_SUCCESS")) &&
-                fs.exists(new org.apache.hadoop.fs.Path(root, s"grp_v$v/_SUCCESS"))
-            }
-          if (committed.nonEmpty) {
-            val v = committed.max
-            triDir = Some(s"$stateDir/v$v")
-            lastBatch = v
-            spark.read.parquet(s"$stateDir/grp_v$v")
-              .as[(String, Long, Long)].collect()
-              .foreach { case (s, nk, n) => grpCounts((s, nk)) = n }
-          }
-        }
-        recovered = true
-      }
+      recover(spark, batchId)
       if (batchId > lastBatch) {
         val cur = batch.select(col("segment"),
           col("nationkey").cast("long").as("nationkey"),
@@ -1134,41 +975,29 @@ object EventStream {
     * recovers (tokDir, lastBatch, langCounts) from the highest fully
     * committed version — exactly the moment Structured Streaming
     * redelivers the last uncommitted batch, which would otherwise
-    * reset the vocabulary state and double-count the replay. */
+    * reset the vocabulary state and double-count the replay; the
+    * [[MonitorState]] gap guards fail a large id gap either way. */
   def langBudgetForeachBatch(stateDir: String)(
       onBudget: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     val langCounts = scala.collection.mutable.Map.empty[String, Long]
     var tokDir: Option[String] = None
     var lastBatch = -1L
-    var recovered = false
+    // post-restart resume: adopt the highest version whose token
+    // state AND lang histogram both committed (a crash between the
+    // two writes falls back to the previous version, and the
+    // redelivered batch re-folds — convergent either way)
+    val recover = MonitorState.recovery(stateDir, "lang_") { (spark, v) =>
+      import spark.implicits._
+      tokDir = Some(s"$stateDir/v$v")
+      lastBatch = v
+      spark.read.parquet(s"$stateDir/lang_v$v")
+        .as[(String, Long)].collect()
+        .foreach { case (l, n) => langCounts(l) = n }
+    }
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
       import spark.implicits._
-      if (!recovered) {
-        // post-restart resume: adopt the highest version whose token
-        // state AND lang histogram both committed (a crash between the
-        // two writes falls back to the previous version, and the
-        // redelivered batch re-folds — convergent either way)
-        val root = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) {
-          val committed = fs.listStatus(root).map(_.getPath.getName)
-            .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-            .filter { v =>
-              fs.exists(new org.apache.hadoop.fs.Path(root, s"v$v/_SUCCESS")) &&
-                fs.exists(new org.apache.hadoop.fs.Path(root, s"lang_v$v/_SUCCESS"))
-            }
-          if (committed.nonEmpty) {
-            val v = committed.max
-            tokDir = Some(s"$stateDir/v$v")
-            lastBatch = v
-            spark.read.parquet(s"$stateDir/lang_v$v")
-              .as[(String, Long)].collect()
-              .foreach { case (l, n) => langCounts(l) = n }
-          }
-        }
-        recovered = true
-      }
+      recover(spark, batchId)
       if (batchId > lastBatch) {
         batch.groupBy("lang").agg(count(lit(1)).as("__graft_n"))
           .as[(String, Long)].collect()
@@ -1205,25 +1034,6 @@ object EventStream {
     }
   }
 
-  /** Streaming histogram-artifact maintenance (#194) — the producer
-    * side of the q75/q57 artifact consumers run from a stream: keep a
-    * day-partitioned (day, keys…, v) → count histogram table current
-    * as events arrive, so the no-rescan drift/winsorize/quantile
-    * consumers always have tonight's artifact without a batch job.
-    * Per micro-batch: the batch reduces to its own counts, the
-    * TOUCHED days' stored rows (and only those — a batch near the
-    * frontier touches 1–2 partitions however long the history) merge
-    * in by count addition, and #158's dynamic-partition overwrite
-    * swaps exactly those day partitions. The merged frame is
-    * materialized through a checkpoint first — it READS the very
-    * files the overwrite replaces (the AnnIndex.maintain
-    * materialize-before-overwrite hazard class). Count addition is
-    * associative, so the final table is bit-identical to a one-shot
-    * batch [[graft.sources.SketchStore.saveHistogram]] over the whole
-    * stream (spec-pinned), and a replayed batch id re-merges nothing —
-    * including the post-crash redelivery, via the durable batch stamp
-    * ([[readBatchStamp]]; the stamp's one narrow at-least-once window
-    * is documented there). Batch schema: `day` + `keyCols` + `v`. */
   /** Durable batch-id stamp beside a maintained COUNT artifact: count
     * addition is not replay-idempotent (unlike the HLL register union
     * in overlapHllForeachBatch), so a post-crash redelivery of the
@@ -1252,30 +1062,107 @@ object EventStream {
     }
   }
 
-  /** Durable snapshots for the DRIVER-HELD monitor histograms
-    * (alphaMix/benford/cusum/chiSquare/skyline) — the restart half of
-    * their prefix-bit-identity promise. Each folded batch persists the
-    * configuration-scale state map as a versioned `_SUCCESS`-gated
-    * parquet (`v<batchId>`, the langBudget convention), and a fresh
-    * closure adopts the highest committed version: recovery lands
-    * exactly at the moment Structured Streaming redelivers the last
-    * uncommitted batch, which the recovered `lastBatch` then skips —
-    * so post-crash reports equal the uninterrupted run's
-    * (spec-pinned). Snapshots are two generic string key columns + a
-    * Long value (every monitor's domain is configuration-scale, so a
-    * per-batch single-file write is artifact-dir hygiene, not a
-    * shuffle); retention keeps the last two committed versions (the
-    * previous survives any crash mid-write of the next). */
+  /** Durable snapshots for the six DRIVER-HELD monitor histograms
+    * (alphaMix/benford/cusum/controlChart/chiSquare/skyline) — the
+    * restart half of their prefix-bit-identity promise — and the one
+    * owner of their fold ([[MonitorState.fold]]). Each folded batch
+    * persists the configuration-scale state map as a versioned
+    * `_SUCCESS`-gated parquet (`v<batchId>`, the langBudget
+    * convention), and a fresh closure adopts the highest committed
+    * version: recovery lands exactly at the moment Structured
+    * Streaming redelivers the last uncommitted batch, which the
+    * recovered `lastBatch` then skips — so post-crash reports equal
+    * the uninterrupted run's (spec-pinned). Snapshots are two generic
+    * string key columns + a Long value (every monitor's domain is
+    * configuration-scale, so a per-batch single-file write is
+    * artifact-dir hygiene, not a shuffle); retention keeps the last
+    * two committed versions (the previous survives any crash
+    * mid-write of the next). kanon and langBudget keep their own
+    * parquet state but recover through the same gap-guarded
+    * [[MonitorState.recovery]]. */
   private[streaming] object MonitorState {
-    def recover(spark: SparkSession, dir: String, batchId: Long)
-        : Option[(Long, Seq[(String, String, Long)])] = {
+    /** The driver-held monitor contract, once: a Long per key, seeded
+      * from `seed` or recovered from `stateDir` on the first batch,
+      * each new batch id folded exactly once, and `report` emitted on
+      * every call — a replayed id re-emits without re-folding. A
+      * monitor supplies only `grouped` (the batch reduced to
+      * snapshot-shaped (k1, k2, v) rows, so one `decode` serves the
+      * batch and the snapshot), `merge`, the key's `encode`/`decode`
+      * to the snapshot's string columns, and `report`. The fold
+      * merges into a candidate map and commits it (snapshot, state,
+      * `lastBatch`) only after the cap check passes: a tripped cap
+      * leaves the closure as it was, so re-invoking the same batch id
+      * re-folds and trips again instead of emitting over-cap state. */
+    def fold[K: Ordering](monitor: String, seed: Map[K, Long],
+        stateDir: Option[String], maxKeys: Int)(
+        grouped: DataFrame => DataFrame, merge: (Long, Long) => Long,
+        encode: K => (String, String), decode: (String, String) => K,
+        emit: (DataFrame, Long) => Unit)(
+        report: (SparkSession, Map[K, Long]) => DataFrame)
+        : (DataFrame, Long) => Unit = {
+      var state = seed
+      var lastBatch = -1L
+      val recover = stateDir.map(dir => recovery(dir) { (spark, v) =>
+        import spark.implicits._
+        state = spark.read.parquet(s"$dir/v$v")
+          .as[(String, String, Long)].collect()
+          .map { case (k1, k2, n) => decode(k1, k2) -> n }.toMap
+        lastBatch = v
+      })
+      (batch: DataFrame, batchId: Long) => {
+        val spark = batch.sparkSession
+        import spark.implicits._
+        recover.foreach(_(spark, batchId))
+        if (batchId > lastBatch) {
+          // LIMIT the collect: the cap must bound what reaches the
+          // driver, not just the map size after an unbounded collect
+          // already landed (the "fail fast" the guard promises)
+          val folded = grouped(batch).limit(maxKeys + 1)
+            .as[(String, String, Long)].collect()
+          guardBound(folded.length, maxKeys, monitor)
+          val next = folded.foldLeft(state) { case (m, (k1, k2, n)) =>
+            val k = decode(k1, k2)
+            m.updated(k, m.get(k).fold(n)(merge(_, n)))
+          }
+          guardBound(next.size, maxKeys, monitor)
+          stateDir.foreach(dir => save(spark, dir, batchId,
+            next.toSeq.sortBy(_._1).map { case (k, n) =>
+              val (k1, k2) = encode(k)
+              (k1, k2, n)
+            }))
+          state = next
+          lastBatch = batchId
+        }
+        emit(report(spark, state), batchId)
+      }
+    }
+
+    /** Recovery run once per closure, on the first batch it sees:
+      * [[committedVersion]] against that batch id, handed to `adopt`
+      * when one exists. A guard failure leaves recovery pending, so
+      * every later call fails the same way. */
+    def recovery(dir: String, siblings: String*)(
+        adopt: (SparkSession, Long) => Unit): (SparkSession, Long) => Unit = {
+      var recovered = false
+      (spark, batchId) => if (!recovered) {
+        committedVersion(spark, dir, batchId, siblings).foreach(adopt(spark, _))
+        recovered = true
+      }
+    }
+
+    /** The highest `v<n>` under `dir` holding `_SUCCESS` — and, for
+      * each sibling prefix `p`, `p` + `v<n>` holding it too (state
+      * written as two halves commits only when both did) — checked
+      * against the delivered `batchId` by the [[RewindTolerance]]
+      * gap guards. */
+    private def committedVersion(spark: SparkSession, dir: String,
+        batchId: Long, siblings: Seq[String]): Option[Long] = {
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(root)) return None
-      val committed = fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-        .filter(v => fs.exists(
-          new org.apache.hadoop.fs.Path(root, s"v$v/_SUCCESS")))
+      val committed = versions(fs, root).filter(v => ("" +: siblings)
+        .forall(p => fs.exists(
+          new org.apache.hadoop.fs.Path(root, s"${p}v$v/_SUCCESS"))))
       if (committed.isEmpty) None
       else {
         val v = committed.max
@@ -1312,21 +1199,23 @@ object EventStream {
           s"[graft] monitor state at $dir committed through batch $v, " +
             s"query delivered batch $batchId: treating as a checkpoint " +
             "rewind — replayed batches re-emit without re-folding")
-        import spark.implicits._
-        Some((v, spark.read.parquet(s"$dir/v$v")
-          .as[(String, String, Long)].collect().toSeq))
+        Some(v)
       }
     }
 
-    def save(spark: SparkSession, dir: String, batchId: Long,
-             rows: Seq[(String, String, Long)]): Unit = {
+    private def versions(fs: org.apache.hadoop.fs.FileSystem,
+                         root: org.apache.hadoop.fs.Path): Seq[Long] =
+      fs.listStatus(root).toSeq.map(_.getPath.getName)
+        .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
+
+    private def save(spark: SparkSession, dir: String, batchId: Long,
+                     rows: Seq[(String, String, Long)]): Unit = {
       import spark.implicits._
       rows.toDF("k1", "k2", "v").repartition(1)
         .write.mode("overwrite").parquet(s"$dir/v$batchId")
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(root).map(_.getPath.getName).filter(_.matches("v\\d+"))
-        .map(_.drop(1).toLong).sorted.dropRight(2)
+      versions(fs, root).sorted.dropRight(2)
         .foreach(v => fs.delete(
           new org.apache.hadoop.fs.Path(root, s"v$v"), true))
     }
@@ -1337,7 +1226,7 @@ object EventStream {
       * caller wiring a high-cardinality stream in, and unbounded
       * driver state fails late and opaquely (heap) — so the fold
       * fails FAST with the contract named instead. */
-    def guardBound(nKeys: Int, maxKeys: Int, monitor: String): Unit =
+    private def guardBound(nKeys: Int, maxKeys: Int, monitor: String): Unit =
       if (nKeys > maxKeys) throw new IllegalStateException(
         s"$monitor monitor state grew to $nKeys keys (cap $maxKeys): " +
           "the key domain must be configuration-scale; re-key the " +
@@ -1448,6 +1337,25 @@ object EventStream {
     if (fs.exists(p)) writeBatchStamp(spark, dir, batchId)
   }
 
+  /** Streaming histogram-artifact maintenance (#194) — the producer
+    * side of the q75/q57 artifact consumers run from a stream: keep a
+    * day-partitioned (day, keys…, v) → count histogram table current
+    * as events arrive, so the no-rescan drift/winsorize/quantile
+    * consumers always have tonight's artifact without a batch job.
+    * Per micro-batch: the batch reduces to its own counts, the
+    * TOUCHED days' stored rows (and only those — a batch near the
+    * frontier touches 1–2 partitions however long the history) merge
+    * in by count addition, and #158's dynamic-partition overwrite
+    * swaps exactly those day partitions. The merged frame is
+    * materialized through a checkpoint first — it READS the very
+    * files the overwrite replaces (the AnnIndex.maintain
+    * materialize-before-overwrite hazard class). Count addition is
+    * associative, so the final table is bit-identical to a one-shot
+    * batch [[graft.sources.SketchStore.saveHistogram]] over the whole
+    * stream (spec-pinned), and a replayed batch id re-merges nothing —
+    * including the post-crash redelivery, via the durable batch stamp
+    * ([[readBatchStamp]]; the stamp's one narrow at-least-once window
+    * is documented there). Batch schema: `day` + `keyCols` + `v`. */
   def histogramArtifactForeachBatch(dir: String, keyCols: Seq[String])(
       onUpdated: (Long) => Unit = _ => ()): (DataFrame, Long) => Unit = {
     var lastBatch = -1L

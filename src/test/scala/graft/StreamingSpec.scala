@@ -1631,7 +1631,8 @@ class StreamingSpec extends AnyFunSuite {
   test("seed-resumed monitors: durable stateDir gives kill/restart parity") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
-    // Each of the five driver-held monitors, run three ways over the
+    // Each of the six driver-held monitors (and the parquet-state
+    // kanon/langBudget monitors, eight in all), run three ways over the
     // same 3-batch stream: (U) uninterrupted, (A) killed after batch 1,
     // (B) a FRESH closure on A's stateDir that sees the redelivered
     // batch 1 then batch 2. Contract: B's redelivery emission == U's
@@ -1742,20 +1743,58 @@ class StreamingSpec extends AnyFunSuite {
     run(sd => EventStream.controlChartForeachBatch(stateDir = sd),
       chartBatches, s"$base/chart", "controlChart")
 
-    // 7. the key-domain bound fails FAST with the contract named,
-    //    instead of growing driver state until the heap fails late
-    val wide = (0 until 10).map(i => (s"et$i", "2024-01-01", 1L))
-      .toDF("event_type", "day", "cents")
-    val g = intercept[IllegalStateException] {
-      EventStream.cusumForeachBatch(maxKeys = 4)((_, _) => ())(wide, 0L)
+    // 7. k-anonymity and 8. lang budget (parquet state beside a
+    //    driver histogram; their stateDir is required, so the
+    //    uninterrupted run gets its own dir): the same restart, rewind
+    //    and gap-guard contract
+    val kanonBatches = Seq(
+      Seq(("BUILDING", 0L, 100L), ("BUILDING", 0L, 250L), ("MACHINERY", 1L, 7L)),
+      Seq(("BUILDING", 0L, 100L), ("MACHINERY", 2L, 9L)),
+      Seq(("MACHINERY", 1L, 8L), ("BUILDING", 2L, 100L)))
+      .map(_.toDF("segment", "nationkey", "bal_cents"))
+    run(sd => EventStream.kanonForeachBatch(sd.getOrElse(s"$base/kanon_u"), nation),
+      kanonBatches, s"$base/kanon", "kanon")
+    val budgetBatches = Seq(
+      Seq((0L, "the cat sat", "en"), (1L, "der hund", "de")),
+      Seq((2L, "the dog ran far", "en"), (3L, "le chat", "fr")),
+      Seq((4L, "die katze", "de"), (5L, "the end", "en")))
+      .map(_.toDF("doc_id", "text", "lang"))
+    run(sd => EventStream.langBudgetForeachBatch(sd.getOrElse(s"$base/budget_u")),
+      budgetBatches, s"$base/budget", "langBudget")
+
+    // 9. the key-domain bound fails FAST with the contract named,
+    //    instead of growing driver state until the heap fails late —
+    //    for every driver-held monitor; and a tripped cap commits
+    //    nothing, so re-invoking the same batch id re-folds and trips
+    //    again instead of emitting the over-cap state
+    def capped(name: String,
+               make: Int => ((DataFrame, Long) => Unit) => (DataFrame, Long) => Unit,
+               keys: Range => DataFrame): Unit = {
+      val g = intercept[IllegalStateException] {
+        make(4)((_, _) => ())(keys(0 until 10), 0L)
+      }
+      assert(g.getMessage.contains("configuration-scale"),
+        s"$name: bound guard message: ${g.getMessage}")
+      // 3 + 3 keys: each batch fits the cap of 4, the two together do not
+      val sink = make(4)((_, _) => ())
+      sink(keys(0 until 3), 0L)
+      intercept[IllegalStateException] { sink(keys(3 until 6), 1L) }
+      val again = intercept[IllegalStateException] { sink(keys(3 until 6), 1L) }
+      assert(again.getMessage.contains("configuration-scale"),
+        s"$name: re-invoked over-cap batch must trip the cap again: ${again.getMessage}")
     }
-    assert(g.getMessage.contains("configuration-scale"),
-      s"bound guard message: ${g.getMessage}")
-    val g2 = intercept[IllegalStateException] {
-      EventStream.controlChartForeachBatch(maxKeys = 4)((_, _) => ())(wide, 0L)
-    }
-    assert(g2.getMessage.contains("configuration-scale"),
-      s"chart bound guard message: ${g2.getMessage}")
+    capped("alphaMix", m => EventStream.alphaMixForeachBatch(maxKeys = m),
+      r => r.map(i => (i.toLong, s"l$i")).toDF("doc_id", "lang"))
+    capped("benford", m => EventStream.benfordForeachBatch(maxKeys = m),
+      r => r.map(i => (i + 1).toLong).toDF("cents"))
+    capped("cusum", m => EventStream.cusumForeachBatch(maxKeys = m),
+      r => r.map(i => (s"et$i", "2024-01-01", 1L)).toDF("event_type", "day", "cents"))
+    capped("controlChart", m => EventStream.controlChartForeachBatch(maxKeys = m),
+      r => r.map(i => (s"et$i", "2024-01-01", 1L)).toDF("event_type", "day", "cents"))
+    capped("chiSquare", m => EventStream.chiSquareForeachBatch(nation, maxKeys = m),
+      r => r.map(i => (s"S$i", i % 3L)).toDF("segment", "nationkey"))
+    capped("skyline", m => EventStream.skylineForeachBatch(maxKeys = m),
+      r => r.map(i => (s"b$i", 100L, 1L)).toDF("brand", "price_cents", "size"))
   }
 
   test("artifact maintainers survive an empty first batch (no data-less dir commit)") {
