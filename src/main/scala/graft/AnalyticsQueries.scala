@@ -11,8 +11,6 @@ import org.apache.spark.sql.types._
   */
 object AnalyticsQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** THE session-boundary rule: a new session starts when there is no
     * prior event or the gap since it exceeds 30 minutes. Single
     * definition shared by q20_sessionize / q37_range_join (via
@@ -4438,174 +4436,94 @@ object AnalyticsQueries {
       |            // (2 * n_evals) AS BIGINT) AS mae_milli
       |FROM bt ORDER BY event_type, method""".stripMargin
 
-  val queries: Seq[(String, Q)] = Seq(
-    "q123_forecast_baseline" -> q123ForecastBaseline,
-    "q122_control_chart" -> q122ControlChart,
-    "q121_cramers_v" -> q121CramersV,
-    "q120_autocorr" -> q120Autocorr,
-    "q117_spearman" -> q117Spearman,
-    "q118_kendall" -> q118Kendall,
-    "q119_hhi" -> q119Hhi,
-    "q115_w1_drift" -> q115W1Drift,
-    "q116_w1_from_artifacts" -> q116W1FromArtifacts,
-    "q114_auc_from_artifacts" -> q114AucFromArtifacts,
-    "q113_auc_drift" -> q113AucDrift,
-    "q112_ks_from_artifacts" -> q112KsFromArtifacts,
-    "q111_ks_drift" -> q111KsDrift,
-    "q110_wilson_rank" -> q110WilsonRank,
-    "q109_locf" -> q109Locf,
-    "q108_rollup_share" -> q108RollupShare,
-    "q107_unpivot" -> q107Unpivot,
-    "q106_recon_audit" -> q106ReconAudit,
-    "q105_variant_shred" -> q105VariantShred,
-    "q104_chi_square" -> q104ChiSquare,
-    "q103_skyline" -> q103Skyline,
-    "q101_theil_sen" -> q101TheilSen,
-    "q102_gini" -> q102Gini,
-    "q100_hazard" -> q100Hazard,
-    "q99_cusum" -> q99Cusum,
-    "q89_pareto" -> q89Pareto,
-    "q90_assoc_rules" -> q90AssocRules,
-    "q91_rfm" -> q91Rfm,
-    "q92_session_paths" -> q92SessionPaths,
-    "q93_benford" -> q93Benford,
-    "q95_mad_outliers" -> q95MadOutliers,
-    "q96_kanon_audit" -> q96KanonAudit,
-    "q97_fk_orphans" -> q97FkOrphans,
-    "q98_weighted_median" -> q98WeightedMedian,
-    "q65_rolling_distinct" -> q65RollingDistinct,
-    "q50_window_stats" -> q50WindowStats,
-    "q51_interval_sweep" -> q51IntervalSweep,
-    "q52_ewma" -> q52Ewma,
-    "q53_cooccurrence" -> q53CoOccurrence,
-    "q54_anomaly" -> q54Anomaly,
-    "q55_quantile_bins" -> q55QuantileBins,
-    "q56_gap_fill" -> q56GapFill,
-    "q57_winsorize" -> q57Winsorize,
-    "q58_drift" -> q58Drift,
-    "q75_drift_from_artifacts" -> q75DriftFromArtifacts,
-    "q77_attribution" -> q77Attribution,
-    "q81_weekhour_profile" -> q81WeekHourProfile,
-    "q82_new_returning" -> q82NewReturning,
-    "q84_ship_latency" -> q84ShipLatency,
-    "q85_session_profile" -> q85SessionProfile,
-    "q86_purchase_gaps" -> q86PurchaseGaps,
-    "q59_transitions" -> q59Transitions,
-    "q60_dq_checks" -> q60DqChecks,
-    "q61_trend_slope" -> q61TrendSlope,
-    "q62_skew_audit" -> q62SkewAudit,
-    "q18_describe_stats" -> q18DescribeStats,
-    "q19_asof_join" -> q19AsofJoin,
-    "q20_sessionize" -> q20Sessionize,
-    "q21_distinct_count" -> q21DistinctCount,
-    "q22_profile" -> q22Profile,
-    "q23_histogram" -> q23Histogram,
-    "q24_top_brands" -> q24TopBrands,
-    "q25_contains_join" -> q25ContainsJoin,
-    "q26_moving_avg" -> q26MovingAvg,
-    "q27_json_extract" -> q27JsonExtract,
-    "q28_anti_semi" -> q28AntiSemi,
-    "q29_percentiles" -> q29Percentiles,
-    "q30_correlation" -> q30Correlation,
-    "q31_cube" -> q31Cube,
-    "q32_edit_distance" -> q32EditDistance,
-    "q33_collect_sorted" -> q33CollectSorted,
-    "q37_range_join" -> q37RangeJoin,
-    "q38_supplier_stats" -> q38SupplierStats,
-    "q39_grouping_sets" -> q39GroupingSets,
-    "q42_resample" -> q42Resample,
-    "q44_approx_percentiles" -> q44ApproxPercentiles,
-    "q46_approx_distinct" -> q46ApproxDistinct,
-    "q71_hll_cube" -> q71HllCube,
-    "q72_audience_overlap" -> q72AudienceOverlap,
-    "q73_overlap_hll" -> q73OverlapHll,
-    "q48_funnel" -> q48Funnel,
-    "q49_cohort_retention" -> q49CohortRetention)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "q123_forecast_baseline" -> q123Sql,
-    "q122_control_chart" -> q122Sql,
-    "q121_cramers_v" -> q121Sql,
-    "q120_autocorr" -> q120Sql,
-    "q117_spearman" -> q117Sql,
-    "q118_kendall" -> q118Sql,
-    "q119_hhi" -> q119Sql,
-    "q72_audience_overlap" -> q72Sql,
-    "q65_rolling_distinct" -> q65Sql,
-    "q89_pareto" -> q89Sql,
-    "q90_assoc_rules" -> q90Sql,
-    "q91_rfm" -> q91Sql,
-    "q92_session_paths" -> q92Sql,
-    "q93_benford" -> q93Sql,
-    "q95_mad_outliers" -> q95Sql,
-    "q96_kanon_audit" -> q96Sql,
-    "q97_fk_orphans" -> q97Sql,
-    "q98_weighted_median" -> q98Sql,
-    "q99_cusum" -> q99Sql,
-    "q100_hazard" -> q100Sql,
-    "q101_theil_sen" -> q101Sql,
-    "q102_gini" -> q102Sql,
-    "q103_skyline" -> q103Sql,
-    "q104_chi_square" -> q104Sql,
-    "q105_variant_shred" -> q105Sql,
-    "q106_recon_audit" -> q106Sql,
-    "q107_unpivot" -> q107Sql,
-    "q108_rollup_share" -> q108Sql,
-    "q109_locf" -> q109Sql,
-    "q111_ks_drift" -> q111Sql,
-    "q113_auc_drift" -> q113Sql,
+  val catalogue: Seq[Query] = Seq(
+    Query("q123_forecast_baseline", q123ForecastBaseline, q123Sql),
+    Query("q122_control_chart", q122ControlChart, q122Sql),
+    Query("q121_cramers_v", q121CramersV, q121Sql),
+    Query("q120_autocorr", q120Autocorr, q120Sql),
+    Query("q117_spearman", q117Spearman, q117Sql),
+    Query("q118_kendall", q118Kendall, q118Sql),
+    Query("q119_hhi", q119Hhi, q119Sql),
+    Query("q115_w1_drift", q115W1Drift, q115Sql),
+    // q116 serves q115's statistic from the shared staged histogram —
+    // bit-identity to the raw scan IS the claim (the q112 convention)
+    Query("q116_w1_from_artifacts", q116W1FromArtifacts, q115Sql),
+    // q114 is the same composition for the U statistic: the oracle is
+    // q113's SQL over the raw events (bit-identity, the q112 convention)
+    Query("q114_auc_from_artifacts", q114AucFromArtifacts, q113Sql),
+    Query("q113_auc_drift", q113AucDrift, q113Sql),
     // q112 serves q111's statistic from persisted day histograms —
     // the oracle IS q111's SQL over the raw events (bit-identity is
     // the artifact path's whole claim, the q75/q58 precedent)
-    "q112_ks_from_artifacts" -> q111Sql,
-    // q114 is the same composition for the U statistic: the oracle is
-    // q113's SQL over the raw events (bit-identity, the q112 convention)
-    "q114_auc_from_artifacts" -> q113Sql,
-    "q115_w1_drift" -> q115Sql,
-    // q116 serves q115's statistic from the shared staged histogram —
-    // bit-identity to the raw scan IS the claim (the q112 convention)
-    "q116_w1_from_artifacts" -> q115Sql,
-    "q110_wilson_rank" -> q110Sql,
-    "q50_window_stats" -> q50Sql,
-    "q51_interval_sweep" -> q51Sql,
-    "q52_ewma" -> q52Sql,
-    "q53_cooccurrence" -> q53Sql,
-    "q54_anomaly" -> q54Sql,
-    "q55_quantile_bins" -> q55Sql,
-    "q56_gap_fill" -> q56Sql,
-    "q57_winsorize" -> q57Sql,
-    "q58_drift" -> q58Sql,
-    "q75_drift_from_artifacts" -> q58Sql,
-    "q77_attribution" -> q77Sql,
-    "q81_weekhour_profile" -> q81Sql,
-    "q82_new_returning" -> q82Sql,
-    "q84_ship_latency" -> q84Sql,
-    "q85_session_profile" -> q85Sql,
-    "q86_purchase_gaps" -> q86Sql,
-    "q59_transitions" -> q59Sql,
-    "q60_dq_checks" -> q60Sql,
-    "q61_trend_slope" -> q61Sql,
-    "q62_skew_audit" -> q62Sql,
-    "q37_range_join" -> q37Sql,
-    "q38_supplier_stats" -> q38Sql,
-    "q39_grouping_sets" -> q39Sql,
-    "q42_resample" -> q42Sql,
-    "q48_funnel" -> q48Sql,
-    "q49_cohort_retention" -> q49Sql,
-    "q18_describe_stats" -> q18Sql,
-    "q19_asof_join" -> q19Sql,
-    "q20_sessionize" -> q20Sql,
-    "q21_distinct_count" -> q21Sql,
-    "q22_profile" -> q22Sql,
-    "q23_histogram" -> q23Sql,
-    "q24_top_brands" -> q24Sql,
-    "q25_contains_join" -> q25Sql,
-    "q26_moving_avg" -> q26Sql,
-    "q27_json_extract" -> q27Sql,
-    "q28_anti_semi" -> q28Sql,
-    "q29_percentiles" -> q29Sql,
-    "q30_correlation" -> q30Sql,
-    "q31_cube" -> q31Sql,
-    "q32_edit_distance" -> q32Sql,
-    "q33_collect_sorted" -> q33Sql)
+    Query("q112_ks_from_artifacts", q112KsFromArtifacts, q111Sql),
+    Query("q111_ks_drift", q111KsDrift, q111Sql),
+    Query("q110_wilson_rank", q110WilsonRank, q110Sql),
+    Query("q109_locf", q109Locf, q109Sql),
+    Query("q108_rollup_share", q108RollupShare, q108Sql),
+    Query("q107_unpivot", q107Unpivot, q107Sql),
+    Query("q106_recon_audit", q106ReconAudit, q106Sql),
+    Query("q105_variant_shred", q105VariantShred, q105Sql),
+    Query("q104_chi_square", q104ChiSquare, q104Sql),
+    Query("q103_skyline", q103Skyline, q103Sql),
+    Query("q101_theil_sen", q101TheilSen, q101Sql),
+    Query("q102_gini", q102Gini, q102Sql),
+    Query("q100_hazard", q100Hazard, q100Sql),
+    Query("q99_cusum", q99Cusum, q99Sql),
+    Query("q89_pareto", q89Pareto, q89Sql),
+    Query("q90_assoc_rules", q90AssocRules, q90Sql),
+    Query("q91_rfm", q91Rfm, q91Sql),
+    Query("q92_session_paths", q92SessionPaths, q92Sql),
+    Query("q93_benford", q93Benford, q93Sql),
+    Query("q95_mad_outliers", q95MadOutliers, q95Sql),
+    Query("q96_kanon_audit", q96KanonAudit, q96Sql),
+    Query("q97_fk_orphans", q97FkOrphans, q97Sql),
+    Query("q98_weighted_median", q98WeightedMedian, q98Sql),
+    Query("q65_rolling_distinct", q65RollingDistinct, q65Sql),
+    Query("q50_window_stats", q50WindowStats, q50Sql),
+    Query("q51_interval_sweep", q51IntervalSweep, q51Sql),
+    Query("q52_ewma", q52Ewma, q52Sql),
+    Query("q53_cooccurrence", q53CoOccurrence, q53Sql),
+    Query("q54_anomaly", q54Anomaly, q54Sql),
+    Query("q55_quantile_bins", q55QuantileBins, q55Sql),
+    Query("q56_gap_fill", q56GapFill, q56Sql),
+    Query("q57_winsorize", q57Winsorize, q57Sql),
+    Query("q58_drift", q58Drift, q58Sql),
+    Query("q75_drift_from_artifacts", q75DriftFromArtifacts, q58Sql),
+    Query("q77_attribution", q77Attribution, q77Sql),
+    Query("q81_weekhour_profile", q81WeekHourProfile, q81Sql),
+    Query("q82_new_returning", q82NewReturning, q82Sql),
+    Query("q84_ship_latency", q84ShipLatency, q84Sql),
+    Query("q85_session_profile", q85SessionProfile, q85Sql),
+    Query("q86_purchase_gaps", q86PurchaseGaps, q86Sql),
+    Query("q59_transitions", q59Transitions, q59Sql),
+    Query("q60_dq_checks", q60DqChecks, q60Sql),
+    Query("q61_trend_slope", q61TrendSlope, q61Sql),
+    Query("q62_skew_audit", q62SkewAudit, q62Sql),
+    Query("q18_describe_stats", q18DescribeStats, q18Sql),
+    Query("q19_asof_join", q19AsofJoin, q19Sql),
+    Query("q20_sessionize", q20Sessionize, q20Sql),
+    Query("q21_distinct_count", q21DistinctCount, q21Sql),
+    Query("q22_profile", q22Profile, q22Sql),
+    Query("q23_histogram", q23Histogram, q23Sql),
+    Query("q24_top_brands", q24TopBrands, q24Sql),
+    Query("q25_contains_join", q25ContainsJoin, q25Sql),
+    Query("q26_moving_avg", q26MovingAvg, q26Sql),
+    Query("q27_json_extract", q27JsonExtract, q27Sql),
+    Query("q28_anti_semi", q28AntiSemi, q28Sql),
+    Query("q29_percentiles", q29Percentiles, q29Sql),
+    Query("q30_correlation", q30Correlation, q30Sql),
+    Query("q31_cube", q31Cube, q31Sql),
+    Query("q32_edit_distance", q32EditDistance, q32Sql),
+    Query("q33_collect_sorted", q33CollectSorted, q33Sql),
+    Query("q37_range_join", q37RangeJoin, q37Sql),
+    Query("q38_supplier_stats", q38SupplierStats, q38Sql),
+    Query("q39_grouping_sets", q39GroupingSets, q39Sql),
+    Query("q42_resample", q42Resample, q42Sql),
+    Query.rowsOnly("q44_approx_percentiles", q44ApproxPercentiles),
+    Query.rowsOnly("q46_approx_distinct", q46ApproxDistinct),
+    Query.rowsOnly("q71_hll_cube", q71HllCube),
+    Query("q72_audience_overlap", q72AudienceOverlap, q72Sql),
+    Query.rowsOnly("q73_overlap_hll", q73OverlapHll),
+    Query("q48_funnel", q48Funnel, q48Sql),
+    Query("q49_cohort_retention", q49CohortRetention, q49Sql))
 }

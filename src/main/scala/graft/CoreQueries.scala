@@ -23,8 +23,6 @@ object CoreQueries {
   // see Exact.scala for why DECIMAL output columns can never hash-match
   // the driver's comparator (Arrow vs duckdb-pandas stringification).
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** #2: filter + projection — Catalyst pushes both into the scan. */
   def q01FilterProject: Q = (spark, dir) =>
     Tables.lineitem(spark, dir)
@@ -901,57 +899,30 @@ object CoreQueries {
       |         - (SELECT CAST(COUNT(*) AS BIGINT) FROM fo)
       |ORDER BY table_name""".stripMargin
 
-  val queries: Seq[(String, Q)] = Seq(
-    "q70_forget_audit" -> q70ForgetAudit,
-    "q69_scd2_temporal" -> q69Scd2Temporal,
-    "q68_entity_resolution" -> q68EntityResolution,
-    "q67_cdc_apply" -> q67CdcApply,
-    "q66_reconcile" -> q66Reconcile,
-    "q01_filter_project" -> q01FilterProject,
-    "q02_agg_pricing" -> q02AggPricing,
-    "q03_join_enrich" -> q03JoinEnrich,
-    "q04_drop_columns" -> q04DropColumns,
-    "q05_null_standardize" -> q05NullStandardize,
-    "q06_normalize_text" -> q06NormalizeText,
-    "q07_dedup_top_per_key" -> q07DedupTopPerKey,
-    "q08_impute_join" -> q08ImputeJoin,
-    "q09_union_concat" -> q09UnionConcat,
-    "q10_type_casts" -> q10TypeCasts,
-    "q11_conditional_update" -> q11ConditionalUpdate,
-    "q12_window_rank" -> q12WindowRank,
-    "q13_pivot_agg" -> q13PivotAgg,
-    "q14_time_window_agg" -> q14TimeWindowAgg,
-    "q15_rollup" -> q15Rollup,
-    "q16_flex_join" -> q16FlexJoin,
-    "q17_etl_pipeline" -> q17EtlPipeline,
-    "q40_upsert" -> q40Upsert,
-    "q41_scd2" -> q41Scd2,
-    "q63_scd2_snapshot" -> q63Scd2Snapshot)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "q70_forget_audit" -> q70Sql,
-    "q69_scd2_temporal" -> q69Sql,
-    "q68_entity_resolution" -> q68Sql,
-    "q67_cdc_apply" -> q67Sql,
-    "q66_reconcile" -> q66Sql,
-    "q01_filter_project" -> q01Sql,
-    "q02_agg_pricing" -> q02Sql,
-    "q03_join_enrich" -> q03Sql,
-    "q04_drop_columns" -> q04Sql,
-    "q05_null_standardize" -> q05Sql,
-    "q06_normalize_text" -> q06Sql,
-    "q07_dedup_top_per_key" -> q07Sql,
-    "q08_impute_join" -> q08Sql,
-    "q09_union_concat" -> q09Sql,
-    "q10_type_casts" -> q10Sql,
-    "q11_conditional_update" -> q11Sql,
-    "q12_window_rank" -> q12Sql,
-    "q13_pivot_agg" -> q13Sql,
-    "q14_time_window_agg" -> q14Sql,
-    "q15_rollup" -> q15Sql,
-    "q16_flex_join" -> q16Sql,
-    "q17_etl_pipeline" -> q17Sql,
-    "q40_upsert" -> q40Sql,
-    "q41_scd2" -> q41Sql,
-    "q63_scd2_snapshot" -> q63Sql)
+  val catalogue: Seq[Query] = Seq(
+    Query("q70_forget_audit", q70ForgetAudit, q70Sql),
+    Query("q69_scd2_temporal", q69Scd2Temporal, q69Sql),
+    Query("q68_entity_resolution", q68EntityResolution, q68Sql),
+    Query("q67_cdc_apply", q67CdcApply, q67Sql),
+    Query("q66_reconcile", q66Reconcile, q66Sql),
+    Query("q01_filter_project", q01FilterProject, q01Sql),
+    Query("q02_agg_pricing", q02AggPricing, q02Sql),
+    Query("q03_join_enrich", q03JoinEnrich, q03Sql),
+    Query("q04_drop_columns", q04DropColumns, q04Sql),
+    Query("q05_null_standardize", q05NullStandardize, q05Sql),
+    Query("q06_normalize_text", q06NormalizeText, q06Sql),
+    Query("q07_dedup_top_per_key", q07DedupTopPerKey, q07Sql),
+    Query("q08_impute_join", q08ImputeJoin, q08Sql),
+    Query("q09_union_concat", q09UnionConcat, q09Sql),
+    Query("q10_type_casts", q10TypeCasts, q10Sql),
+    Query("q11_conditional_update", q11ConditionalUpdate, q11Sql),
+    Query("q12_window_rank", q12WindowRank, q12Sql),
+    Query("q13_pivot_agg", q13PivotAgg, q13Sql),
+    Query("q14_time_window_agg", q14TimeWindowAgg, q14Sql),
+    Query("q15_rollup", q15Rollup, q15Sql),
+    Query("q16_flex_join", q16FlexJoin, q16Sql),
+    Query("q17_etl_pipeline", q17EtlPipeline, q17Sql),
+    Query("q40_upsert", q40Upsert, q40Sql),
+    Query("q41_scd2", q41Scd2, q41Sql),
+    Query("q63_scd2_snapshot", q63Scd2Snapshot, q63Sql))
 }

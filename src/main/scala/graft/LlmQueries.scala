@@ -19,8 +19,6 @@ import graft.text.TextFunctions._
   */
 object LlmQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val MinHashK = 64
   private val MinHashBands = 16
   private val MinHashSeed = 0x5eedL
@@ -3758,151 +3756,93 @@ object LlmQueries {
       |GROUP BY 1, 3, 4, 5
       |ORDER BY bin""".stripMargin
 
-  val queries: Seq[(String, Q)] = Seq(
-    "s24_isotropy_audit" -> s24IsotropyAudit,
-    "s25_matryoshka_audit" -> s25MatryoshkaAudit,
-    "s26_hubness" -> s26Hubness,
-    "s27_hubness_ivf" -> s27HubnessIvf,
-    "s28_retrieval_agreement" -> s28RetrievalAgreement,
-    "d42_lsh_design" -> d42LshDesign,
-    "d14_pagerank" -> d14Pagerank,
-    "d18_kcore" -> d18Kcore,
-    "d19_dup_ngrams" -> d19DupNgrams,
-    "d20_communities" -> d20Communities,
-    "t20_novelty" -> t20Novelty,
-    "d21_source_overlap" -> d21SourceOverlap,
-    "d22_containment" -> d22Containment,
-    "d23_dup_span_removal" -> d23DupSpanRemoval,
-    "d24_incremental_gate" -> d24IncrementalGate,
-    "d25_hits" -> d25Hits,
-    "d15_canonical_pick" -> d15CanonicalPick,
-    "d16_triangles" -> d16Triangles,
-    "d17_cdc_chunk_dedup" -> d17CdcChunkDedup,
-    "s08_bm25" -> s08Bm25,
-    "s09_hybrid_rerank" -> s09HybridRerank,
-    "d01_dedup_exact" -> d01DedupExact,
-    "d02_minhash_lsh" -> d02MinHashLsh,
-    "d27_cross_contamination" -> d27CrossCorpusNearDup,
-    "d31_gate_audit" -> d31GateAudit,
-    "d03_simhash" -> d03SimHash,
-    "d04_ngram_jaccard" -> d04NgramJaccard,
-    "d05_embed_neardup" -> d05EmbedNearDup,
-    "d06_dedup_clusters" -> d06DedupClusters,
-    "d28_dedup_savings" -> d28DedupSavings,
-    "d29_stage_savings" -> d29StageSavings,
-    "d30_savings_by_source" -> d30SavingsBySource,
-    "d32_provenance" -> d32Provenance,
-    "d33_provenance_datasheet" -> d33ProvenanceDatasheet,
-    "d34_savings_trend" -> d34SavingsTrend,
-    "d35_tau_sweep" -> d35TauSweep,
-    "d36_cluster_quality" -> d36ClusterQuality,
-    "d37_cluster_recut" -> d37ClusterRecut,
-    "d38_soft_dedup_weights" -> d38SoftDedupWeights,
-    "d39_review_queue" -> d39ReviewQueue,
-    "d40_cluster_sizes" -> d40ClusterSizes,
-    "d41_cluster_agreement" -> d41ClusterAgreement,
-    "d26_incremental_clusters" -> d26IncrementalClusters,
-    "d07_embed_neardup_lsh" -> d07EmbedNearDupLsh,
-    "d13_semdedup" -> d13SemDedup,
-    "s01_ann_bruteforce" -> s01AnnBruteForce,
-    "s11_mips" -> s11Mips,
-    "s29_ann_hamming" -> s29AnnHamming,
-    "s12_kmeans" -> s12Kmeans,
-    "s13_cluster_cap" -> s13ClusterCap,
-    "s02_ann_lsh" -> s02AnnLsh,
-    "s03_ann_ivf" -> s03AnnIvf,
-    "s14_ann_recall_audit" -> s14AnnRecallAudit,
-    "s15_filtered_ann" -> s15FilteredAnn,
-    "s16_mmr" -> s16Mmr,
-    "s17_probe_sweep" -> s17ProbeSweep,
-    "s18_mmr_sweep" -> s18MmrSweep,
-    "s19_ann_delete" -> s19AnnDelete,
-    "m04_pixel_neardup" -> m04PixelNearDup,
-    "s04_quantize_int8" -> s04QuantizeInt8,
-    "s20_centroid_drift" -> s20CentroidDrift,
-    "s05_ann_int8_rerank" -> s05AnnInt8Rerank,
-    "s06_ann_pq" -> s06AnnPq,
-    "s07_ann_ivfpq" -> s07AnnIvfPq,
-    "s10_knn_graph" -> s10KnnGraph,
-    "s21_hard_negatives" -> s21HardNegatives,
-    "s22_hard_negatives_ivf" -> s22HardNegativesIvf,
-    "s23_rrf_fusion" -> s23RrfFusion,
-    "t01_lang_id" -> t01LangId,
-    "t02_quality_score" -> t02QualityScore,
-    "t03_token_count" -> t03TokenCount,
-    "t04_fingerprint" -> t04Fingerprint,
-    "t05_word_count" -> t05WordCount,
-    "t06_repetition" -> t06Repetition,
-    "t07_redact" -> t07Redact,
-    "m01_multimodal_meta" -> m01MultimodalMeta,
-    "m02_frame_sample" -> m02FrameSample,
-    "m03_perceptual_neardup" -> m03PerceptualNearDup,
-    "m05_color_stats" -> m05ColorStats,
-    "m06_waveform_stats" -> m06WaveformStats)
-
   /** d02/d03/d07/s02 intentionally absent (rows-only check; each
     * carries a quantified recall spec instead). */
-  val oracles: Seq[(String, String)] = Seq(
-    "s24_isotropy_audit" -> s24Sql,
+  val catalogue: Seq[Query] = Seq(
+    Query("s24_isotropy_audit", s24IsotropyAudit, s24Sql),
     // s25 intentionally absent (rows-only: float cosine path; AnnSpec
     // pins the full-width anchor + planted-geometry directions)
-    "s26_hubness" -> s26Sql,
+    Query.rowsOnly("s25_matryoshka_audit", s25MatryoshkaAudit),
+    Query("s26_hubness", s26Hubness, s26Sql),
     // s27 intentionally absent (rows-only: the IVF graph's iterative
     // float k-means quantizer; AnnSpec pins mass conservation + the
     // planted exact↔scale pairing)
-    "s28_retrieval_agreement" -> s28Sql,
-    "d42_lsh_design" -> d42Sql,
-    "d14_pagerank" -> d14Sql,
-    "d18_kcore" -> d18Sql,
-    "d19_dup_ngrams" -> d19Sql,
-    "d20_communities" -> d20Sql,
-    "t20_novelty" -> t20Sql,
-    "d21_source_overlap" -> d21Sql,
-    "d22_containment" -> d22Sql,
-    "d23_dup_span_removal" -> d23Sql,
-    "d24_incremental_gate" -> d24Sql,
-    "d25_hits" -> d25Sql,
-    "d15_canonical_pick" -> d15Sql,
-    "d16_triangles" -> d16Sql,
-    "d17_cdc_chunk_dedup" -> d17Sql,
-    "s08_bm25" -> s08Sql,
-    "s10_knn_graph" -> s10Sql,
-    "s21_hard_negatives" -> s21Sql,
-    "s09_hybrid_rerank" -> s09Sql,
-    "s23_rrf_fusion" -> s23Sql,
-    "s04_quantize_int8" -> s04Sql,
-    "s20_centroid_drift" -> s20Sql,
-    "d01_dedup_exact" -> d01Sql,
-    "d04_ngram_jaccard" -> d04Sql,
-    "d05_embed_neardup" -> d05Sql,
-    "d06_dedup_clusters" -> d06Sql,
-    "d28_dedup_savings" -> d28Sql,
-    "d29_stage_savings" -> d29Sql,
-    "d30_savings_by_source" -> d30Sql,
-    "d32_provenance" -> d32Sql,
-    "d33_provenance_datasheet" -> d33Sql,
-    "d34_savings_trend" -> d34Sql,
-    "d35_tau_sweep" -> d35Sql,
-    "d36_cluster_quality" -> d36Sql,
-    "d37_cluster_recut" -> d37Sql,
-    "d38_soft_dedup_weights" -> d38Sql,
-    "d39_review_queue" -> d39Sql,
-    "d40_cluster_sizes" -> d40Sql,
-    "d41_cluster_agreement" -> d41Sql,
+    Query.rowsOnly("s27_hubness_ivf", s27HubnessIvf),
+    Query("s28_retrieval_agreement", s28RetrievalAgreement, s28Sql),
+    Query("d42_lsh_design", d42LshDesign, d42Sql),
+    Query("d14_pagerank", d14Pagerank, d14Sql),
+    Query("d18_kcore", d18Kcore, d18Sql),
+    Query("d19_dup_ngrams", d19DupNgrams, d19Sql),
+    Query("d20_communities", d20Communities, d20Sql),
+    Query("t20_novelty", t20Novelty, t20Sql),
+    Query("d21_source_overlap", d21SourceOverlap, d21Sql),
+    Query("d22_containment", d22Containment, d22Sql),
+    Query("d23_dup_span_removal", d23DupSpanRemoval, d23Sql),
+    Query("d24_incremental_gate", d24IncrementalGate, d24Sql),
+    Query("d25_hits", d25Hits, d25Sql),
+    Query("d15_canonical_pick", d15CanonicalPick, d15Sql),
+    Query("d16_triangles", d16Triangles, d16Sql),
+    Query("d17_cdc_chunk_dedup", d17CdcChunkDedup, d17Sql),
+    Query("s08_bm25", s08Bm25, s08Sql),
+    Query("s09_hybrid_rerank", s09HybridRerank, s09Sql),
+    Query("d01_dedup_exact", d01DedupExact, d01Sql),
+    Query.rowsOnly("d02_minhash_lsh", d02MinHashLsh),
+    Query.rowsOnly("d27_cross_contamination", d27CrossCorpusNearDup),
+    Query.rowsOnly("d31_gate_audit", d31GateAudit),
+    Query.rowsOnly("d03_simhash", d03SimHash),
+    Query("d04_ngram_jaccard", d04NgramJaccard, d04Sql),
+    Query("d05_embed_neardup", d05EmbedNearDup, d05Sql),
+    Query("d06_dedup_clusters", d06DedupClusters, d06Sql),
+    Query("d28_dedup_savings", d28DedupSavings, d28Sql),
+    Query("d29_stage_savings", d29StageSavings, d29Sql),
+    Query("d30_savings_by_source", d30SavingsBySource, d30Sql),
+    Query("d32_provenance", d32Provenance, d32Sql),
+    Query("d33_provenance_datasheet", d33ProvenanceDatasheet, d33Sql),
+    Query("d34_savings_trend", d34SavingsTrend, d34Sql),
+    Query("d35_tau_sweep", d35TauSweep, d35Sql),
+    Query("d36_cluster_quality", d36ClusterQuality, d36Sql),
+    Query("d37_cluster_recut", d37ClusterRecut, d37Sql),
+    Query("d38_soft_dedup_weights", d38SoftDedupWeights, d38Sql),
+    Query("d39_review_queue", d39ReviewQueue, d39Sql),
+    Query("d40_cluster_sizes", d40ClusterSizes, d40Sql),
+    Query("d41_cluster_agreement", d41ClusterAgreement, d41Sql),
     // incremental ≡ full: the oracle IS the from-scratch d06 SQL
-    "d26_incremental_clusters" -> d06Sql,
-    "s01_ann_bruteforce" -> s01Sql,
-    "s11_mips" -> s11Sql,
-    "s29_ann_hamming" -> s29Sql,
-    "s12_kmeans" -> s12Sql,
-    "s13_cluster_cap" -> s13Sql,
-    "t01_lang_id" -> t01Sql,
-    "t02_quality_score" -> t02Sql,
-    "t03_token_count" -> t03Sql,
-    "t04_fingerprint" -> t04Sql,
-    "t05_word_count" -> t05Sql,
-    "t06_repetition" -> t06Sql,
-    "t07_redact" -> t07Sql,
-    "m01_multimodal_meta" -> m01Sql,
-    "m02_frame_sample" -> m02Sql)
+    Query("d26_incremental_clusters", d26IncrementalClusters, d06Sql),
+    Query.rowsOnly("d07_embed_neardup_lsh", d07EmbedNearDupLsh),
+    Query.rowsOnly("d13_semdedup", d13SemDedup),
+    Query("s01_ann_bruteforce", s01AnnBruteForce, s01Sql),
+    Query("s11_mips", s11Mips, s11Sql),
+    Query("s29_ann_hamming", s29AnnHamming, s29Sql),
+    Query("s12_kmeans", s12Kmeans, s12Sql),
+    Query("s13_cluster_cap", s13ClusterCap, s13Sql),
+    Query.rowsOnly("s02_ann_lsh", s02AnnLsh),
+    Query.rowsOnly("s03_ann_ivf", s03AnnIvf),
+    Query.rowsOnly("s14_ann_recall_audit", s14AnnRecallAudit),
+    Query.rowsOnly("s15_filtered_ann", s15FilteredAnn),
+    Query.rowsOnly("s16_mmr", s16Mmr),
+    Query.rowsOnly("s17_probe_sweep", s17ProbeSweep),
+    Query.rowsOnly("s18_mmr_sweep", s18MmrSweep),
+    Query.rowsOnly("s19_ann_delete", s19AnnDelete),
+    Query.rowsOnly("m04_pixel_neardup", m04PixelNearDup),
+    Query("s04_quantize_int8", s04QuantizeInt8, s04Sql),
+    Query("s20_centroid_drift", s20CentroidDrift, s20Sql),
+    Query.rowsOnly("s05_ann_int8_rerank", s05AnnInt8Rerank),
+    Query.rowsOnly("s06_ann_pq", s06AnnPq),
+    Query.rowsOnly("s07_ann_ivfpq", s07AnnIvfPq),
+    Query("s10_knn_graph", s10KnnGraph, s10Sql),
+    Query("s21_hard_negatives", s21HardNegatives, s21Sql),
+    Query.rowsOnly("s22_hard_negatives_ivf", s22HardNegativesIvf),
+    Query("s23_rrf_fusion", s23RrfFusion, s23Sql),
+    Query("t01_lang_id", t01LangId, t01Sql),
+    Query("t02_quality_score", t02QualityScore, t02Sql),
+    Query("t03_token_count", t03TokenCount, t03Sql),
+    Query("t04_fingerprint", t04Fingerprint, t04Sql),
+    Query("t05_word_count", t05WordCount, t05Sql),
+    Query("t06_repetition", t06Repetition, t06Sql),
+    Query("t07_redact", t07Redact, t07Sql),
+    Query("m01_multimodal_meta", m01MultimodalMeta, m01Sql),
+    Query("m02_frame_sample", m02FrameSample, m02Sql),
+    Query.rowsOnly("m03_perceptual_neardup", m03PerceptualNearDup),
+    Query.rowsOnly("m05_color_stats", m05ColorStats),
+    Query.rowsOnly("m06_waveform_stats", m06WaveformStats))
 }

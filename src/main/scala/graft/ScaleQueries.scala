@@ -22,8 +22,6 @@ import graft.sources.Bucketing
   */
 object ScaleQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // Monetary sums use graft.Exact's scaled-BIGINT convention — see
   // Exact.scala for why DECIMAL output columns can't hash-match.
 
@@ -600,36 +598,20 @@ object ScaleQueries {
       |SELECT est_n, exact_n, est_n - exact_n AS over_n
       |FROM e CROSS JOIN x""".stripMargin
 
-  val queries: Seq[(String, Q)] = Seq(
-    "q87_cms_freq" -> q87CmsFreq,
-    "q88_cms_cdc" -> q88CmsCdc,
-    "q94_join_size_cms" -> q94JoinSizeCms,
-    "q34_heavy_hitters" -> q34HeavyHitters,
-    "q76_topk_weekly" -> q76TopkWeekly,
-    "q80_topk_churn" -> q80TopkChurn,
-    "q83_quantile_trend" -> q83QuantileTrend,
-    "q79_quantiles_from_artifacts" -> q79QuantilesFromArtifacts,
-    "q35_salted_join" -> q35SaltedJoin,
-    "q36_bucketed_join" -> q36BucketedJoin,
-    "q43_incremental_agg" -> q43IncrementalAgg,
-    "q45_bloom_prejoin" -> q45BloomPrejoin,
-    "q47_zorder" -> q47ZOrder,
-    "q64_global_seq" -> q64GlobalSeq,
-    "q74_topk_day_range" -> q74TopkDayRange)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "q88_cms_cdc" -> q88Sql,
-    "q94_join_size_cms" -> q94Sql,
-    "q74_topk_day_range" -> q74Sql,
-    "q76_topk_weekly" -> q76Sql,
-    "q79_quantiles_from_artifacts" -> q79Sql,
-    "q80_topk_churn" -> q80Sql,
-    "q83_quantile_trend" -> q83Sql,
-    "q34_heavy_hitters" -> q34Sql,
-    "q35_salted_join" -> q35Sql,
-    "q36_bucketed_join" -> q36Sql,
-    "q43_incremental_agg" -> q43Sql,
-    "q45_bloom_prejoin" -> q45Sql,
-    "q47_zorder" -> q47Sql,
-    "q64_global_seq" -> q64Sql)
+  val catalogue: Seq[Query] = Seq(
+    Query.rowsOnly("q87_cms_freq", q87CmsFreq),
+    Query("q88_cms_cdc", q88CmsCdc, q88Sql),
+    Query("q94_join_size_cms", q94JoinSizeCms, q94Sql),
+    Query("q34_heavy_hitters", q34HeavyHitters, q34Sql),
+    Query("q76_topk_weekly", q76TopkWeekly, q76Sql),
+    Query("q80_topk_churn", q80TopkChurn, q80Sql),
+    Query("q83_quantile_trend", q83QuantileTrend, q83Sql),
+    Query("q79_quantiles_from_artifacts", q79QuantilesFromArtifacts, q79Sql),
+    Query("q35_salted_join", q35SaltedJoin, q35Sql),
+    Query("q36_bucketed_join", q36BucketedJoin, q36Sql),
+    Query("q43_incremental_agg", q43IncrementalAgg, q43Sql),
+    Query("q45_bloom_prejoin", q45BloomPrejoin, q45Sql),
+    Query("q47_zorder", q47ZOrder, q47Sql),
+    Query("q64_global_seq", q64GlobalSeq, q64Sql),
+    Query("q74_topk_day_range", q74TopkDayRange, q74Sql))
 }

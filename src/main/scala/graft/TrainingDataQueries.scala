@@ -16,8 +16,6 @@ import graft.dedup.MinHash
   */
 object TrainingDataQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Deterministic hash bucket in [0, n): first 8 hex digits of
     * md5(decimal string of the id). Content-independent, stable across
     * engines, runs and cluster layouts — the property a train/test
@@ -3041,108 +3039,56 @@ object TrainingDataQueries {
       |       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
       |FROM b GROUP BY domain, blocked ORDER BY domain, blocked""".stripMargin
 
-  val queries: Seq[(String, Q)] = Seq(
-    "t55_domain_blocklist" -> t55DomainBlocklist,
-    "t54_url_census" -> t54UrlCensus,
-    "t53_quality_agreement" -> t53QualityAgreement,
-    "t52_ttr" -> t52Ttr,
-    "t51_lz_complexity" -> t51LzComplexity,
-    "t50_dsir_weights" -> t50DsirWeights,
-    "t49_shard_invalidation" -> t49ShardInvalidation,
-    "t48_split_datasheet" -> t48SplitDatasheet,
-    "t47_target_mix_resample" -> t47TargetMixResample,
-    "t46_decorrelated_order" -> t46DecorrelatedOrder,
-    "t45_gate_venn" -> t45GateVenn,
-    "t44_split_agreement" -> t44SplitAgreement,
-    "t43_freq_spectrum" -> t43FreqSpectrum,
-    "t41_zipf_audit" -> t41ZipfAudit,
-    "t42_burstiness" -> t42Burstiness,
-    "t40_charset_audit" -> t40CharsetAudit,
-    "t36_curriculum_order" -> t36CurriculumOrder,
-    "t37_mixture_order" -> t37MixtureOrder,
-    "t38_length_buckets" -> t38LengthBuckets,
-    "t39_shard_plan" -> t39ShardPlan,
-    "t35_epoch_shuffle" -> t35EpochShuffle,
-    "t30_class_balance" -> t30ClassBalance,
-    "t33_quality_sample" -> t33QualitySample,
-    "t34_gated_alpha_mix" -> t34GatedAlphaMix,
-    "t31_lang_budget" -> t31LangBudget,
-    "t29_gopher_rules" -> t29GopherRules,
-    "t26_alpha_mix" -> t26AlphaMix,
-    "t27_vocab_coverage" -> t27VocabCoverage,
-    "t28_source_coverage" -> t28SourceCoverage,
-    "t24_fertility" -> t24Fertility,
-    "t23_leakage_safe_split" -> t23LeakageSafeSplit,
-    "t22_weighted_sample" -> t22WeightedSample,
-    "t19_corpus_report" -> t19CorpusReport,
-    "t18_bpe_merges" -> t18BpeMerges,
-    "t21_bpe_encode" -> t21BpeEncode,
-    "t17_inverted_index" -> t17InvertedIndex,
-    "t16_readability" -> t16Readability,
-    "t15_collocations" -> t15Collocations,
-    "d12_mixture" -> d12Mixture,
-    "t08_hash_split" -> t08HashSplit,
-    "d08_chunk" -> d08Chunk,
-    "t09_salient_terms" -> t09SalientTerms,
-    "d09_contamination" -> d09Contamination,
-    "t25_decontam_coverage" -> t25DecontamCoverage,
-    "d10_pack" -> d10Pack,
-    "t10_stratified_sample" -> t10StratifiedSample,
-    "t11_oov_rate" -> t11OovRate,
-    "t12_length_outliers" -> t12LengthOutliers,
-    "t13_boilerplate" -> t13Boilerplate,
-    "t14_lm_score" -> t14LmScore,
-    "d11_corpus_pipeline" -> d11CorpusPipeline)
-
-  val oracles: Seq[(String, String)] = Seq(
-    "t55_domain_blocklist" -> t55Sql,
-    "t54_url_census" -> t54Sql,
-    "t53_quality_agreement" -> t53Sql,
-    "t52_ttr" -> t52Sql,
-    "t50_dsir_weights" -> t50Sql,
-    "t49_shard_invalidation" -> t49Sql,
-    "t48_split_datasheet" -> t48Sql,
-    "t47_target_mix_resample" -> t47Sql,
-    "t46_decorrelated_order" -> t46Sql,
-    "t45_gate_venn" -> t45Sql,
-    "t44_split_agreement" -> t44Sql,
-    "t43_freq_spectrum" -> t43Sql,
-    "t41_zipf_audit" -> t41Sql,
-    "t42_burstiness" -> t42Sql,
-    "t40_charset_audit" -> t40Sql,
-    "t36_curriculum_order" -> t36Sql,
-    "t37_mixture_order" -> t37Sql,
-    "t38_length_buckets" -> t38Sql,
-    "t39_shard_plan" -> t39Sql,
-    "t35_epoch_shuffle" -> t35Sql,
-    "t24_fertility" -> t24Sql,
-    "t26_alpha_mix" -> t26Sql,
-    "t27_vocab_coverage" -> t27Sql,
-    "t28_source_coverage" -> t28Sql,
-    "t29_gopher_rules" -> t29Sql,
-    "t30_class_balance" -> t30Sql,
-    "t33_quality_sample" -> t33Sql,
-    "t34_gated_alpha_mix" -> t34Sql,
-    "t31_lang_budget" -> t31Sql,
-    "t23_leakage_safe_split" -> t23Sql,
-    "t22_weighted_sample" -> t22Sql,
-    "t19_corpus_report" -> t19Sql,
-    "t18_bpe_merges" -> t18Sql,
-    "t21_bpe_encode" -> t21Sql,
-    "t17_inverted_index" -> t17Sql,
-    "t16_readability" -> t16Sql,
-    "t15_collocations" -> t15Sql,
-    "d12_mixture" -> d12Sql,
-    "t13_boilerplate" -> t13Sql,
-    "t14_lm_score" -> t14Sql,
-    "t08_hash_split" -> t08Sql,
-    "d08_chunk" -> d08Sql,
-    "t09_salient_terms" -> t09Sql,
-    "d09_contamination" -> d09Sql,
-    "t25_decontam_coverage" -> t25Sql,
-    "d10_pack" -> d10Sql,
-    "t10_stratified_sample" -> t10Sql,
-    "t11_oov_rate" -> t11Sql,
-    "t12_length_outliers" -> t12Sql,
-    "d11_corpus_pipeline" -> d11Sql)
+  val catalogue: Seq[Query] = Seq(
+    Query("t55_domain_blocklist", t55DomainBlocklist, t55Sql),
+    Query("t54_url_census", t54UrlCensus, t54Sql),
+    Query("t53_quality_agreement", t53QualityAgreement, t53Sql),
+    Query("t52_ttr", t52Ttr, t52Sql),
+    Query.rowsOnly("t51_lz_complexity", t51LzComplexity),
+    Query("t50_dsir_weights", t50DsirWeights, t50Sql),
+    Query("t49_shard_invalidation", t49ShardInvalidation, t49Sql),
+    Query("t48_split_datasheet", t48SplitDatasheet, t48Sql),
+    Query("t47_target_mix_resample", t47TargetMixResample, t47Sql),
+    Query("t46_decorrelated_order", t46DecorrelatedOrder, t46Sql),
+    Query("t45_gate_venn", t45GateVenn, t45Sql),
+    Query("t44_split_agreement", t44SplitAgreement, t44Sql),
+    Query("t43_freq_spectrum", t43FreqSpectrum, t43Sql),
+    Query("t41_zipf_audit", t41ZipfAudit, t41Sql),
+    Query("t42_burstiness", t42Burstiness, t42Sql),
+    Query("t40_charset_audit", t40CharsetAudit, t40Sql),
+    Query("t36_curriculum_order", t36CurriculumOrder, t36Sql),
+    Query("t37_mixture_order", t37MixtureOrder, t37Sql),
+    Query("t38_length_buckets", t38LengthBuckets, t38Sql),
+    Query("t39_shard_plan", t39ShardPlan, t39Sql),
+    Query("t35_epoch_shuffle", t35EpochShuffle, t35Sql),
+    Query("t30_class_balance", t30ClassBalance, t30Sql),
+    Query("t33_quality_sample", t33QualitySample, t33Sql),
+    Query("t34_gated_alpha_mix", t34GatedAlphaMix, t34Sql),
+    Query("t31_lang_budget", t31LangBudget, t31Sql),
+    Query("t29_gopher_rules", t29GopherRules, t29Sql),
+    Query("t26_alpha_mix", t26AlphaMix, t26Sql),
+    Query("t27_vocab_coverage", t27VocabCoverage, t27Sql),
+    Query("t28_source_coverage", t28SourceCoverage, t28Sql),
+    Query("t24_fertility", t24Fertility, t24Sql),
+    Query("t23_leakage_safe_split", t23LeakageSafeSplit, t23Sql),
+    Query("t22_weighted_sample", t22WeightedSample, t22Sql),
+    Query("t19_corpus_report", t19CorpusReport, t19Sql),
+    Query("t18_bpe_merges", t18BpeMerges, t18Sql),
+    Query("t21_bpe_encode", t21BpeEncode, t21Sql),
+    Query("t17_inverted_index", t17InvertedIndex, t17Sql),
+    Query("t16_readability", t16Readability, t16Sql),
+    Query("t15_collocations", t15Collocations, t15Sql),
+    Query("d12_mixture", d12Mixture, d12Sql),
+    Query("t08_hash_split", t08HashSplit, t08Sql),
+    Query("d08_chunk", d08Chunk, d08Sql),
+    Query("t09_salient_terms", t09SalientTerms, t09Sql),
+    Query("d09_contamination", d09Contamination, d09Sql),
+    Query("t25_decontam_coverage", t25DecontamCoverage, t25Sql),
+    Query("d10_pack", d10Pack, d10Sql),
+    Query("t10_stratified_sample", t10StratifiedSample, t10Sql),
+    Query("t11_oov_rate", t11OovRate, t11Sql),
+    Query("t12_length_outliers", t12LengthOutliers, t12Sql),
+    Query("t13_boilerplate", t13Boilerplate, t13Sql),
+    Query("t14_lm_score", t14LmScore, t14Sql),
+    Query("d11_corpus_pipeline", d11CorpusPipeline, d11Sql))
 }

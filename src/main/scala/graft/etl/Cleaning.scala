@@ -14,15 +14,6 @@ import org.apache.spark.sql.types.DataType
   */
 object Cleaning {
 
-  /** `'' → NULL` for the given string columns (reference treats empty
-    * string and NaN interchangeably before imputation). */
-  def emptyToNull(df: DataFrame, cols: Seq[String]): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, nullif(col(c), lit(""))))
-
-  /** `NULL → sentinel` (the reference's `fillna("N/A")`). */
-  def fillSentinel(df: DataFrame, sentinel: String, cols: Seq[String]): DataFrame =
-    df.na.fill(sentinel, cols)
-
   /** Column-level: empty-or-null → sentinel. */
   def standardize(c: Column, sentinel: String = "N/A"): Column =
     coalesce(nullif(c, lit("")), lit(sentinel))

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.dedup.{ConnectedComponents, SetSimJoin}
-import graft.etl.{Cleaning, CoOccur, Dedup, Impute, Skew, TextNorm}
+import graft.dedup.SetSimJoin
+import graft.etl.{CoOccur, Dedup, TextNorm}
 import graft.functions.{BloomFilter, CdcChunks, HistogramRank}
 import graft.sim.{NearDup, SemDeDup}
 import graft.sources.Writers
@@ -30,31 +30,9 @@ object syntax {
     def normalizeText(from: String, to: String): DataFrame =
       df.withColumn(to, TextNorm.normalizeText(df(from)))
 
-    /** Null/empty standardization with a sentinel (Cleaning.standardize). */
-    def standardizeNulls(colName: String, sentinel: String): DataFrame =
-      df.withColumn(colName, Cleaning.standardize(df(colName), sentinel))
-
-    def dropColumnsSafe(names: Seq[String]): DataFrame =
-      Cleaning.dropColumns(df, names)
-
     /** Keep the top row per key under the given ordering. */
     def dedupTopPerKey(keys: Seq[String], order: Seq[Column]): DataFrame =
       Dedup.topPerKey(df, keys, order)
-
-    /** Exact duplicate groups keyed on a digest column. */
-    def dedupExactGroups(digest: Column, id: Column): DataFrame =
-      Dedup.exactGroups(df, digest, id)
-
-    /** Impute a column from a broadcastable lookup with fallback. */
-    def imputeFrom(lookup: DataFrame, keyCol: String, lookupKey: String,
-                   targetCol: String, valueCol: String,
-                   fallback: Option[String] = None): DataFrame =
-      Impute.fromLookup(df, lookup, keyCol, lookupKey, targetCol, valueCol, fallback)
-
-    /** Skew-safe equi-join against a non-broadcastable dimension. */
-    def saltedJoinWith(dims: DataFrame, key: String, saltSource: Column,
-                       nSalts: Int = 8): DataFrame =
-      Skew.saltedJoinBy(df, dims, key, saltSource, nSalts)
 
     /** Exact Jaccard self-join (lossless prefix+positional filtering).
       * `setCol` must hold distinct `array<bigint>` token fingerprints. */
@@ -67,10 +45,6 @@ object syntax {
     def containmentJoin(idCol: String, setCol: String,
                        tauNum: Int, tauDen: Int): DataFrame =
       SetSimJoin.containmentJoin(df, idCol, setCol, tauNum, tauDen)
-
-    /** Connected components over this edge list → (id, comp). */
-    def connectedComponents(idCols: (String, String) = ("id1", "id2")): DataFrame =
-      ConnectedComponents.run(df, idCols)
 
     /** All-or-nothing artifact publish (temp dir + atomic rename). */
     def publishTo(uri: String, format: String = "parquet"): Unit =

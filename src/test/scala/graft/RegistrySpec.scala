@@ -32,6 +32,25 @@ class RegistrySpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
   }
 
+  // Checked on the concatenated Seq: `queries` and `oracleSql` are Maps,
+  // and `.toMap` keeps one of two entries that share a key without a word.
+  test("catalogue names are unique across the five catalogues") {
+    val repeated = SparkEntry.catalogue.groupBy(_.name).collect {
+      case (name, entries) if entries.size > 1 => name
+    }
+    assert(repeated.isEmpty, s"keys catalogued more than once: ${repeated.toSeq.sorted}")
+  }
+
+  // A deleted oracle turns a gated query into a rows-only one; only the
+  // oracled count shows it.
+  test("catalogue size is pinned: 253 queries, 223 of them oracled") {
+    val n = SparkEntry.catalogue.size
+    val oracled = SparkEntry.catalogue.count(_.oracle.isDefined)
+    assert((n, oracled) === ((253, 223)),
+      s"catalogue holds $n queries, $oracled oracled: a change that adds or " +
+        "removes a key or an oracle updates this pin in the same change")
+  }
+
   test("flagship entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).limit(1).count() === 1L)
   }

@@ -15,7 +15,7 @@ duckdb fetchdf -> float64 -> "123.4"), which hid every trailing-zero
 decimal mismatch when both sides went through DuckDB. Queries must not
 output DECIMAL columns at all; this checker now fails them if they do.
 """
-import sys, json, glob, os
+import sys, json, glob, os, time
 import datetime
 import duckdb
 import pandas as pd
@@ -66,6 +66,7 @@ def main(sfdir, outdir):
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
     n_pass = n_fail = 0
     for name in sorted(oracle):
+        t0 = time.perf_counter()
         files = sorted(glob.glob(os.path.join(outdir, name, "*.parquet")))
         if not files:
             print(f"FAIL {name}: no spark output")
@@ -115,7 +116,7 @@ def main(sfdir, outdir):
             print(f"  first diff row {i}:\n    exp={e_n.iloc[i].to_dict()}\n    got={g_n.iloc[i].to_dict()}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(e_n)} rows)")
+            print(f"PASS {name} ({len(e_n)} rows, {time.perf_counter() - t0:.1f} s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
