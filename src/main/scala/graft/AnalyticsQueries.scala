@@ -2797,7 +2797,6 @@ object AnalyticsQueries {
     val daily = Tables.events(spark, dir)
       .groupBy(col("event_type"), col("ts").cast(DateType).as("day"))
       .agg(sum(round(col("value") * 100, 0).cast(LongType)).as("cents"))
-    val wType = Window.partitionBy("event_type")
     val wSeq = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily

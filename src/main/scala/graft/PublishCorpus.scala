@@ -76,8 +76,7 @@ object PublishCorpus {
         .withColumn("n_tok", whitespaceTokenCount(col("text")))
     }
 
-  private val Splits = Seq("train", "valid", "test")
-  private[graft] def Splits_forTest: Seq[String] = Splits
+  private[graft] val Splits = Seq("train", "valid", "test")
 
   /** Stage 3: per-split shard plan — t39's greedy token-budget cut
     * (epoch-0 hash order, distributed prefix sum, shard = start

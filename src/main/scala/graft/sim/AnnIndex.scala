@@ -1,11 +1,13 @@
 package graft.sim
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CentroidCells.centroidCells
 import graft.functions.VectorFunctions._
+import graft.sources.Writers
 
 /** Persistent IVF index: build once, probe many — the production ANN
   * lifecycle ([[Ann.ivfTopK]] refits its coarse quantizer on every
@@ -41,7 +43,7 @@ object AnnIndex {
     * once per maintenance batch (driver-side, kilobytes). Missing dir
     * (pre-versioning index or fresh build) reads as 0. */
   private def readGen(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/gen")
+    val p = new Path(s"$dir/gen")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0L
     else spark.read.parquet(p.toString).head().getLong(0)
@@ -156,9 +158,7 @@ object AnnIndex {
     // crash window (cells missing) would create a fresh cells dir of
     // only the new rows, and the now-present dir would stop the heal
     // from ever restoring the staged survivors
-    healInterruptedPurge(
-      new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+    healPurge(spark, dir)
     val centroids = readCentroids(spark, dir)
     val g = readGen(spark, dir) + 1L
     newRows.drop(SeqCol).withColumn(SeqCol, lit(g))
@@ -204,10 +204,8 @@ object AnnIndex {
   def compact(spark: SparkSession, dir: String,
               minFileBytes: Long = 8L * 1024 * 1024,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    healInterruptedPurge(
-      new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
-    graft.sources.Writers.compactSmallFiles(
+    healPurge(spark, dir)
+    Writers.compactSmallFiles(
       spark, s"$dir/cells", minFileBytes, targetFileBytes)
   }
 
@@ -239,24 +237,21 @@ object AnnIndex {
     * the tombstone list — the reclamation pass that turns [[delete]]'s
     * logical mask into reclaimed bytes (GDPR's "erased from backups
     * and replicas" clause needs this pass, not just the mask). The
-    * survivors are fully MATERIALIZED into a hidden sibling staging
-    * dir and swapped in via the same no-loss rename protocol as
-    * [[graft.sources.Writers.publish]] — an in-place overwrite would
-    * delete the cells table at job start, so a crash or executor loss
-    * mid-rewrite would destroy the index (tombstones alone cannot
-    * restore it); with the staged swap the previous cells survive at
-    * `.cells.previous` until the new table is in place (and a crash
-    * BETWEEN the two renames — cells absent for an instant — is
-    * auto-completed by [[healInterruptedPurge]] on every read and
-    * maintenance path, never a manual restore). Cell partition
-    * values are untouched so partition pruning and the calibrated meta
-    * survive, probes before/after are bit-identical (spec-pinned), and
-    * tombstones are cleared only AFTER the swap commits (a crash
-    * between swap and clear just re-masks already-purged ids — the
-    * anti-join is a no-op on them). Returns the number of rows
-    * physically removed; no-op 0 when nothing is tombstoned. */
+    * survivors are fully MATERIALIZED into `.cells.purge-inprogress`
+    * and swapped in by [[graft.sources.Writers.replaceDir]] — an
+    * in-place overwrite would delete the cells table at job start, so
+    * a crash or executor loss mid-rewrite would destroy the index
+    * (tombstones alone cannot restore it); a crash between the swap's
+    * two renames is completed by [[healPurge]] on every read and
+    * maintenance path. Cell partition values are untouched so
+    * partition pruning and the calibrated meta survive, probes
+    * before/after are bit-identical (spec-pinned), and tombstones are
+    * cleared only AFTER the swap commits (a crash between swap and
+    * clear just re-masks already-purged ids — the anti-join is a no-op
+    * on them). Returns the number of rows physically removed; no-op 0
+    * when nothing is tombstoned. */
   def purge(spark: SparkSession, dir: String): Long = {
-    val tomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
+    val tomb = new Path(s"$dir/tombstones")
     val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(tomb)) return 0L
     // SNAPSHOT the tombstone files first and apply/clear exactly that
@@ -268,103 +263,44 @@ object AnnIndex {
     // the new cells table; the next purge applies them.
     val tombFiles = tombstoneFiles(fs, tomb)
     if (tombFiles.isEmpty) return 0L
-    healInterruptedPurge(fs, dir)
-    val cells = new org.apache.hadoop.fs.Path(s"$dir/cells")
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".cells.purge-inprogress")
-    val prev = new org.apache.hadoop.fs.Path(dir, ".cells.previous")
-    val nAll = spark.read.parquet(cells.toString).count()
-    val mask = spark.read.parquet(tombFiles.map(_.toString): _*)
-      .groupBy("id").agg(max("upto_seq").as("__graft_tomb_seq"))
-    val live = spark.read.parquet(cells.toString)
-      .join(mask, Seq("id"), "left")
-      .filter(col("__graft_tomb_seq").isNull ||
-        col(SeqCol) > col("__graft_tomb_seq"))
-      .drop("__graft_tomb_seq")
-    fs.delete(tmp, true)
-    live.write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-    val nLive = spark.read.parquet(tmp.toString).count()
-    fs.delete(prev, true)
-    if (fs.exists(cells) && !fs.rename(cells, prev))
-      throw new java.io.IOException(s"purge: rename $cells -> $prev failed")
-    // a concurrent reader's healInterruptedPurge can win either rename
-    // of this swap window: un-nest if it restored cells first (rename
-    // onto an existing dir nests, reporting success), and accept the
-    // swap as committed if it rolled OUR staged table forward — a
-    // throw here would skip the tombstone clear after a successful
-    // purge. Clearing tombstones is only safe when the staged
-    // SURVIVORS are live, so the rolled-back case (old cells restored,
-    // tmp still present) must re-stage, not proceed.
-    if (fs.rename(tmp, cells)) {
-      val nested = new org.apache.hadoop.fs.Path(cells, tmp.getName)
-      if (fs.exists(nested)) {
-        // healer restored the OLD cells and we nested inside it: undo
-        // and retry the swap once from the healed state
-        fs.rename(nested, tmp)
-        if (!fs.rename(cells, prev) || !fs.rename(tmp, cells))
-          throw new java.io.IOException(
-            s"purge: swap retry failed (previous cells at $prev)")
-      }
-    } else if (!(fs.exists(cells) && !fs.exists(tmp)))
-      throw new java.io.IOException(
-        s"purge: rename $tmp -> $cells failed (previous cells at $prev)")
-    fs.delete(prev, true)
-    // best-effort tmp cleanup: a concurrent healer that lost a rename
-    // race can un-nest a full duplicate of the cells table back to the
-    // hidden tmp path AFTER our swap was accepted — left there, it
-    // would persist (retaining purged bytes on disk) until the next
-    // purge with pending tombstones. Every accepted-swap path ends
-    // with cells live, so tmp is disposable here.
-    fs.delete(tmp, true)
+    val cells = cellsPath(dir)
+    val (nAll, nLive) = Writers.replaceDir(fs, cells, purgeStaging(cells)) { tmp =>
+      val nAll = spark.read.parquet(cells.toString).count()
+      val mask = spark.read.parquet(tombFiles.map(_.toString): _*)
+        .groupBy("id").agg(max("upto_seq").as("__graft_tomb_seq"))
+      spark.read.parquet(cells.toString)
+        .join(mask, Seq("id"), "left")
+        .filter(col("__graft_tomb_seq").isNull ||
+          col(SeqCol) > col("__graft_tomb_seq"))
+        .drop("__graft_tomb_seq")
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
+      (nAll, spark.read.parquet(tmp.toString).count())
+    }
     // clear ONLY the snapshot's files, only after the swap commits (a
     // crash in between re-masks already-purged ids — anti-join no-op)
     tombFiles.foreach(f => fs.delete(f, false))
     nAll - nLive
   }
 
-  /** Complete or roll back an INTERRUPTED [[purge]] swap. Between
-    * rename(cells→prev) and rename(tmp→cells) there is a crash window
-    * in which `$dir/cells` does not exist: the data is safe (the
-    * staged survivors were fully written before any rename, the old
-    * table sits at `.cells.previous`), but every probe/census read
-    * fails path-not-found — and the next purge reads cells first, so
-    * nothing self-heals. This runs at purge start and on the read
-    * path: roll FORWARD when the staged table is complete (parquet
-    * `_SUCCESS` present — it always is in this window, the write
-    * finished before the first rename), else back to the previous
-    * cells. Either outcome is consistent: tombstones are cleared only
-    * AFTER a committed swap, so the snapshot's masks still cover the
-    * rolled-either-way table (re-masking already-purged ids is an
-    * anti-join no-op). */
-  private def healInterruptedPurge(fs: org.apache.hadoop.fs.FileSystem,
-                                   dir: String): Unit = {
-    val cells = new org.apache.hadoop.fs.Path(s"$dir/cells")
-    if (fs.exists(cells)) return
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".cells.purge-inprogress")
-    val prev = new org.apache.hadoop.fs.Path(dir, ".cells.previous")
-    // A LIVE purge can be in this same window, so every rename here
-    // must tolerate losing the race (Hadoop rename ONTO an existing
-    // dir NESTS the source inside it and reports success — the
-    // Stages.scala hazard): after each rename, un-nest if the racer
-    // committed first. A nested `.cells.previous` would otherwise
-    // retain tombstoned bytes on disk invisibly (dot-prefixed dirs are
-    // hidden from Spark reads but not erased — a GDPR violation).
-    def renameUnlessNested(src: org.apache.hadoop.fs.Path): Boolean = {
-      if (!fs.rename(src, cells)) return false
-      val nested = new org.apache.hadoop.fs.Path(cells, src.getName)
-      if (fs.exists(nested)) { fs.rename(nested, src); false } else true
-    }
-    if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")) &&
-        renameUnlessNested(tmp)) {
-      fs.delete(prev, true)
-    } else if (!fs.exists(cells) && fs.exists(prev)) {
-      if (!renameUnlessNested(prev) && !fs.exists(cells))
-        throw new java.io.IOException(
-          s"purge recovery: rename $prev -> $cells failed")
-    }
+  private def cellsPath(dir: String): Path = new Path(dir, "cells")
+  private def purgeStaging(cells: Path): Path =
+    Writers.hiddenSibling(cells, "purge-inprogress")
+
+  /** Complete or roll back an INTERRUPTED [[purge]] swap
+    * ([[graft.sources.Writers.healReplace]]). Runs on every read and
+    * maintenance path: in the crash window `cells` is absent, and
+    * nothing else would restore it. Either outcome is consistent:
+    * tombstones are cleared only AFTER a committed swap, so the
+    * snapshot's masks still cover the rolled-either-way table. */
+  private def healPurge(spark: SparkSession, dir: String): Unit = {
+    val cells = cellsPath(dir)
+    Writers.healReplace(
+      cells.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      cells, purgeStaging(cells))
   }
 
   private def clearTombstones(spark: SparkSession, dir: String): Unit = {
-    val tomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
+    val tomb = new Path(s"$dir/tombstones")
     val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(tomb)) fs.delete(tomb, true)
   }
@@ -375,11 +311,10 @@ object AnnIndex {
     * the read paths mask from whatever is present; a dir holding only
     * committer droppings (`_SUCCESS`) reads as "no tombstones"
     * instead of failing schema inference. */
-  private def tombstoneFiles(fs: org.apache.hadoop.fs.FileSystem,
-      tomb: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.Path] =
-    fs.listStatus(tomb).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") &&
-        !p.getName.startsWith("_") && !p.getName.startsWith("."))
+  private def tombstoneFiles(fs: FileSystem, tomb: Path): Array[Path] =
+    fs.listStatus(tomb)
+      .filter(st => Writers.isDataFile(st) && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath)
 
   /** The cells table minus tombstoned ids — EVERY consumer of the
     * cell files goes through here, so a logical delete is exact on
@@ -388,14 +323,14 @@ object AnnIndex {
     * corpus), so AQE broadcasts it; when no delete has ever run the
     * read is the bare parquet scan. */
   private def liveCells(spark: SparkSession, dir: String): DataFrame = {
-    val tomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
+    val tomb = new Path(s"$dir/tombstones")
     val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healInterruptedPurge(fs, dir)
+    healPurge(spark, dir)
     healInterruptedSplit(spark, dir)
     val cells = spark.read.parquet(s"$dir/cells")
     val files =
       if (fs.exists(tomb)) tombstoneFiles(fs, tomb)
-      else Array.empty[org.apache.hadoop.fs.Path]
+      else Array.empty[Path]
     if (files.nonEmpty) {
       // versioned mask: a row dies only if some tombstone for its id
       // covers its write generation — upserted/re-appended versions
@@ -565,18 +500,17 @@ object AnnIndex {
     * The calibrated `meta.n_probe` operating point is kept — after a
     * split each probed unit is smaller, so probe cost only drops.
     *
-    * Crash safety is the stage-then-commit shape of [[purge]] /
+    * Crash safety is the marker commit of
     * [[graft.sources.Writers.compactSmallFiles]]: ALL reassigned
     * rows, the updated centroid table and meta are fully staged under
     * a hidden sibling dir first; a root-level pending marker listing
     * the retired source files is the COMMIT POINT; apply then moves
-    * staged files in, deletes the originals, and swaps
-    * centroids/meta. Every reader heals through the marker
-    * ([[healInterruptedSplit]] on the [[liveCells]] path): a crash
-    * before the marker leaves an invisible staging dir (swept by the
-    * next split); a crash after it rolls FORWARD idempotently —
-    * renames skip files already moved, deletes skip files already
-    * gone. Like compact/purge, a probe racing the apply window can
+    * staged files in ([[graft.sources.Writers.moveIn]]), deletes the
+    * originals, and swaps centroids/meta. Every reader heals through
+    * the marker ([[healInterruptedSplit]] on the [[liveCells]] path):
+    * a crash before the marker leaves an invisible staging dir (swept
+    * by the next split); a crash after it rolls FORWARD idempotently.
+    * Like compact/purge, a probe racing the apply window can
     * transiently see a vector twice; schedule splits in the same
     * maintenance window. Single maintenance writer assumed (the
     * compact/purge contract).
@@ -615,14 +549,14 @@ object AnnIndex {
                                 maxMultiple: Long, seed: Long,
                                 maxSubCells: Int): StagedSplit = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healInterruptedPurge(fs, dir)
+    healPurge(spark, dir)
     healInterruptedSplit(spark, dir)
     // uncommitted staging from a crashed predecessor is invisible to
     // readers and safe to sweep HERE (single maintenance writer) —
     // a reader's healer must never touch it (see healInterruptedSplit)
-    val tmp = new org.apache.hadoop.fs.Path(dir, SplitTmp)
+    val tmp = new Path(dir, SplitTmp)
     fs.delete(tmp, true)
     val nCells0 = spark.read.parquet(s"$dir/centroids").count().toInt
     val pops = liveCells(spark, dir).groupBy("cell")
@@ -664,12 +598,9 @@ object AnnIndex {
           .parquet(s"${tmp.toString}/cells")
         updated(h) = subCents.head
         subCents.tail.foreach(c => updated += c)
-        val cdir = new org.apache.hadoop.fs.Path(s"$dir/cells/cell=$h")
-        fs.listStatus(cdir).foreach { st =>
-          val nm = st.getPath.getName
-          if (st.isFile && !nm.startsWith("_") && !nm.startsWith("."))
-            originals += s"cell=$h/$nm"
-        }
+        val cdir = new Path(s"$dir/cells/cell=$h")
+        fs.listStatus(cdir).filter(Writers.isDataFile)
+          .foreach(st => originals += s"cell=$h/${st.getPath.getName}")
         base += kEff - 1
         split += 1
       }
@@ -687,7 +618,7 @@ object AnnIndex {
         .repartition(1).write.mode("overwrite").parquet(s"${tmp.toString}/meta")
     }
     // COMMIT: from here every reader rolls the split forward
-    val marker = new org.apache.hadoop.fs.Path(dir, SplitMarker)
+    val marker = new Path(dir, SplitMarker)
     val out = fs.create(marker, true)
     out.write((s"tmp=$SplitTmp" +: originals.toSeq).mkString("\n")
       .getBytes("UTF-8"))
@@ -704,56 +635,46 @@ object AnnIndex {
     * is already gone is complete. */
   private def applySplit(spark: SparkSession, dir: String,
                          originals: Seq[String]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir, SplitTmp)
-    val tmpCells = new org.apache.hadoop.fs.Path(tmp, "cells")
+    val tmp = new Path(dir, SplitTmp)
+    val tmpCells = new Path(tmp, "cells")
     if (fs.exists(tmpCells)) {
       fs.listStatus(tmpCells)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
         .foreach { pd =>
-          val dest = new org.apache.hadoop.fs.Path(
-            s"$dir/cells/${pd.getPath.getName}")
+          val dest = new Path(s"$dir/cells/${pd.getPath.getName}")
           fs.mkdirs(dest)
-          fs.listStatus(pd.getPath).foreach { st =>
-            val nm = st.getPath.getName
-            if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) {
-              val to = new org.apache.hadoop.fs.Path(dest, nm)
-              if (!fs.exists(to) && !fs.rename(st.getPath, to) &&
-                  !fs.exists(to))
-                throw new java.io.IOException(
-                  s"splitHotCells: rename ${st.getPath} -> $to failed")
-            }
-          }
+          Writers.moveIn(fs, pd.getPath, dest)
         }
     }
     originals.foreach { rel =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/cells/$rel")
+      val p = new Path(s"$dir/cells/$rel")
       if (fs.exists(p)) fs.delete(p, false)
     }
     Seq("centroids", "meta").foreach { t =>
-      val staged = new org.apache.hadoop.fs.Path(tmp, t)
+      val staged = new Path(tmp, t)
       if (fs.exists(staged)) {
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$t")
+        val live = new Path(s"$dir/$t")
         fs.delete(live, true)
         if (!fs.rename(staged, live) && !fs.exists(live))
           throw new java.io.IOException(
             s"splitHotCells: swap $staged -> $live failed")
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(dir, SplitMarker), false)
+    fs.delete(new Path(dir, SplitMarker), false)
     fs.delete(tmp, true)
   }
 
   /** Roll a COMMITTED-but-interrupted [[splitHotCells]] forward — the
-    * read-path healer, sibling of [[healInterruptedPurge]]. Acts only
+    * read-path healer, sibling of [[healPurge]]. Acts only
     * when the commit marker exists; an UNcommitted staging dir (no
     * marker) belongs to a possibly-live splitter and is left alone —
     * the next [[splitHotCells]] sweeps it. One `exists` probe on the
     * no-marker fast path. */
   private[graft] def healInterruptedSplit(spark: SparkSession,
                                           dir: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(dir, SplitMarker)
+    val marker = new Path(dir, SplitMarker)
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) return
     val in = fs.open(marker)

@@ -46,8 +46,10 @@ object LayoutAudit {
     val fb = new scala.collection.mutable.ArrayBuffer[String]()
     val rootUri = root.toUri.getPath
     // Spark's InMemoryFileIndex visibility rule: any path segment below
-    // the root starting with '_' or '.' is invisible (manifests from
-    // writeShards, .previous/.inprogress staging) — auditing those would
+    // the root starting with '_' or '.' is invisible (writeShards'
+    // `_manifest`, compaction markers, compactSmallFiles' per-partition
+    // `.<dir>.compact-small-inprogress` staging; Writers.replaceDir
+    // stages beside the root, not under it) — auditing those would
     // read foreign schemas or count row groups the scan never sees.
     def visible(p: Path): Boolean = {
       val rel = p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")

@@ -26,7 +26,7 @@ class PublishSpec extends AnyFunSuite {
     assert(rec.nonEmpty && rec.map(_._1).toSet == Set("train", "valid", "test"))
     assert(PublishCorpus.isPublished(spark, out))
     // receipts certify what LANDED: re-read every shard and recompute
-    val landed = PublishCorpus.Splits_forTest.flatMap { s =>
+    val landed = PublishCorpus.Splits.flatMap { s =>
       val rows = spark.read.parquet(s"$out/$s")
       rows.groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))

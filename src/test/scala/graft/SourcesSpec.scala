@@ -182,6 +182,52 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/t").count() == 3)
   }
 
+  test("publish, writeShards and compact complete a swap interrupted between its renames") {
+    // crash window of the hidden-sibling swap: the old directory already
+    // moved to `.t.previous`, the complete new one still at its staging
+    // name, `t` absent. Re-running the same call must commit, leaving
+    // exactly the new rows and no debris. The staged side holds v2 and
+    // the old side v1, so a heal that rolled back instead of forward
+    // shows up as v1 rows after `compact`.
+    def rows(v: Int) = (1 to 4).map(i => (i.toLong, s"v$v-$i"))
+    def plan(v: Int) = rows(v).map { case (id, s) => ((id % 2).toInt, id, id, 2L, s) }
+      .toDF("shard", "seq", "doc_id", "n_tok", "text")
+    def sorted(p: String) = spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+    // (call, staging suffix, build version v at a path, re-run with v2, contents)
+    val cases = Seq[(String, String, (Int, String) => Unit, String => Unit, String => Seq[String])](
+      ("publish", "inprogress",
+        (v, p) => Writers.publish(rows(v).toDF("id", "tag"), p),
+        p => Writers.publish(rows(2).toDF("id", "tag"), p),
+        sorted),
+      ("writeShards", "inprogress",
+        (v, p) => Writers.writeShards(plan(v), p),
+        p => Writers.writeShards(plan(2), p),
+        p => sorted(p) ++ sorted(s"$p/_manifest")),
+      ("compact", "compact-inprogress",
+        (v, p) => {
+          rows(v).toDF("id", "tag").repartition(4).write.parquet(p)
+          Writers.compact(spark, p, targetFileBytes = 1L << 30)
+        },
+        p => Writers.compact(spark, p, targetFileBytes = 1L << 30),
+        sorted))
+    cases.foreach { case (name, suffix, build, rerun, contents) =>
+      val dir = Files.createTempDirectory(s"graft_swap_$name").toString
+      def mv(a: String, b: String): Unit =
+        assert(new java.io.File(dir, a).renameTo(new java.io.File(dir, b)), s"$name: $a -> $b")
+      build(2, s"$dir/ref")
+      val want = contents(s"$dir/ref")
+      build(1, s"$dir/t")
+      build(2, s"$dir/staged")
+      mv("staged", s".t.$suffix")
+      mv("t", ".t.previous")
+      rerun(s"$dir/t")
+      assert(contents(s"$dir/t") == want, s"$name: rows after the heal")
+      val debris = new java.io.File(dir).list()
+        .filter(n => n.contains("previous") || n.contains("inprogress"))
+      assert(debris.isEmpty, s"$name left ${debris.toSeq}")
+    }
+  }
+
   test("orc round-trip preserves values and pushes filters to the scan") {
     val dir = Files.createTempDirectory("graft_orc").toString
     val df = Seq((1L, "x", 1.5), (2L, "y", 2.5), (3L, "z", 3.5)).toDF("id", "s", "v")
