@@ -769,52 +769,99 @@ object TrainingDataQueries {
       |GROUP BY i.term, i.df ORDER BY term""".stripMargin
 
   /** #118 (t18): BPE merge learning — the first 5 merge rules of a
-    * byte-pair-encoding tokenizer, learned distributed (Sennrich et
-    * al., ACL'16 — the algorithm behind GPT/Llama tokenizers). Each
-    * iteration: count every adjacent symbol pair across the
-    * word-frequency table (overlapping counts, standard BPE), pick the
-    * most frequent pair (ties: lexicographically smallest — exact,
-    * deterministic), and merge its occurrences greedily left-to-right
-    * in every word.
+    * byte-pair-encoding tokenizer (Sennrich et al., ACL'16 — the
+    * algorithm behind GPT/Llama tokenizers), learned by [[bpeLearn]]
+    * over the corpus's word-frequency table. */
+  def t18BpeMerges: Q = (spark, dir) =>
+    bpeLearn(docWords(spark, dir), nMerges = 5)._1.orderBy("merge_no")
+
+  /** (doc_id, word): every `[a-z0-9]+` word occurrence of the corpus. */
+  private def docWords(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
+      .filter(length(col("word")) > 0)
+
+  /** BPE merge learning, t18's and t21's one learner, over the
+    * word-frequency table (word, wc) of the occurrences `words`
+    * ([[docWords]]). Returns the merges as (merge_no, merge_pat,
+    * pair_count) and every word's final symbols as (word, sym, wc).
+    * Each iteration: count
+    * every adjacent symbol pair across the table (overlapping counts,
+    * standard BPE), pick the most frequent pair (ties: the smallest
+    * pattern in UTF-8 byte order — exact, deterministic), and merge
+    * its occurrences greedily left-to-right in every word.
     *
     * Symbols are anchored as `<sym>` so a literal `replace` of
     * `<a><b>` → `<ab>` can never match across symbol boundaries, and
     * left-to-right non-overlapping `replace` IS the BPE greedy merge —
-    * both engines' replace() agree, so the DuckDB oracle unrolls the
-    * same 5 iterations and hash-matches (d14's regime).
+    * both engines' replace() agree, so the DuckDB oracles unroll the
+    * same iterations and hash-match (d14's regime). A table whose
+    * pairs run out before `nMerges` stops merging there and empties
+    * `syms` (the distributed cross join with an empty argmax does).
     *
     * Scale shape: the corpus collapses ONCE into the word-frequency
-    * table (vocab-sized, not corpus-sized); each iteration is a
-    * pair-explode + partial-agged count over the vocab, a 1-ROW argmax
-    * (TakeOrdered), and a broadcast-join + narrow replace — 5 linear
-    * vocab passes, no driver-side data loop (the argmax row rejoins as
-    * a broadcast, never a collect). */
-  def t18BpeMerges: Q = (spark, dir) => {
-    val nMerges = 5
-    val words = Tables.documents(spark, dir)
-      .select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("wc"))
-    var syms = words.select(
-      regexp_replace(col("word"), "(.)", "<$1>").as("sym"), col("wc"))
-    val pairsOf =
-      """CASE WHEN size(t) < 2 THEN array()
-        |ELSE transform(sequence(0, size(t) - 2),
-        |               i -> concat('<', t[i], '><', t[i + 1], '>')) END""".stripMargin
-    var merges = Vector.empty[DataFrame]
-    for (i <- 1 to nMerges) {
-      val best = syms
-        .withColumn("t", split(expr("substring(sym, 2, length(sym) - 2)"), "><"))
-        .select(col("wc"), explode(expr(pairsOf)).as("pat"))
-        .groupBy("pat").agg(sum("wc").as("c"))
-        .orderBy(col("c").desc, col("pat").asc).limit(1)
-      merges :+= best.select(lit(i.toLong).as("merge_no"),
-        col("pat").as("merge_pat"), col("c").as("pair_count"))
-      syms = syms.crossJoin(broadcast(best))
-        .withColumn("sym", expr("replace(sym, pat, replace(pat, '><', ''))"))
-        .select("sym", "wc")
+    * table (vocab-sized, not corpus-sized), which is cut and probed by
+    * [[graft.etl.SmallPath]]. At or below the bound the merges are
+    * learned on the driver. Above it each iteration is a pair-explode
+    * + partial-agged count over the cut, a 1-ROW argmax
+    * (TakeOrdered), and a broadcast-join + narrow replace — linear
+    * vocab passes, the argmax row rejoining as a broadcast. */
+  private def bpeLearn(words: DataFrame, nMerges: Int): (DataFrame, DataFrame) = {
+    val spark = words.sparkSession
+    import spark.implicits._
+    // lazy: the probe's job materializes the cut
+    val (cut, free) = etl.Checkpoints.cutReleasable(
+      words.groupBy("word").agg(count(lit(1)).as("wc")), eager = false, reliable = false)
+    val anchor = "(.)"
+    etl.SmallPath.collectBelow(cut) match {
+      case Some(rows) =>
+        free()
+        var syms = rows.toSeq.map(r =>
+          (r.getString(0), r.getString(0).replaceAll(anchor, "<$1>"), r.getLong(1)))
+        val merges = Seq.newBuilder[(Long, String, Long)]
+        for (i <- 1 to nMerges if syms.nonEmpty) {
+          val counts = scala.collection.mutable.HashMap.empty[String, Long]
+          syms.foreach { case (_, sym, wc) =>
+            val t = sym.substring(1, sym.length - 1).split("><", -1)
+            for (j <- 0 until t.length - 1) {
+              val pat = s"<${t(j)}><${t(j + 1)}>"
+              counts(pat) = Math.addExact(counts.getOrElse(pat, 0L), wc)
+            }
+          }
+          if (counts.isEmpty) syms = Seq.empty
+          else {
+            // on these ASCII patterns String order IS UTF-8 byte order
+            val (pat, c) = counts.minBy { case (p, n) => (-n, p) }
+            merges += ((i.toLong, pat, c))
+            val merged = pat.replace("><", "")
+            syms = syms.map { case (w, sym, wc) => (w, sym.replace(pat, merged), wc) }
+          }
+        }
+        // one partition: t18's ORDER BY then sorts in place
+        (merges.result().toDF("merge_no", "merge_pat", "pair_count").coalesce(1),
+          syms.toDF("word", "sym", "wc"))
+      case None =>
+        var syms = cut.select(col("word"),
+          regexp_replace(col("word"), anchor, "<$1>").as("sym"), col("wc"))
+        val pairsOf =
+          """CASE WHEN size(t) < 2 THEN array()
+            |ELSE transform(sequence(0, size(t) - 2),
+            |               i -> concat('<', t[i], '><', t[i + 1], '>')) END""".stripMargin
+        var merges = Vector.empty[DataFrame]
+        for (i <- 1 to nMerges) {
+          val best = syms
+            .withColumn("t", split(expr("substring(sym, 2, length(sym) - 2)"), "><"))
+            .select(col("wc"), explode(expr(pairsOf)).as("pat"))
+            .groupBy("pat").agg(sum("wc").as("c"))
+            .orderBy(col("c").desc, col("pat").asc).limit(1)
+          merges :+= best.select(lit(i.toLong).as("merge_no"),
+            col("pat").as("merge_pat"), col("c").as("pair_count"))
+          syms = syms.crossJoin(broadcast(best))
+            .withColumn("sym", expr("replace(sym, pat, replace(pat, '><', ''))"))
+            .select("word", "sym", "wc")
+        }
+        (merges.reduce(_ unionAll _), syms)
     }
-    merges.reduce(_ unionAll _).orderBy("merge_no")
   }
 
   val t18Sql: String = {
@@ -853,37 +900,19 @@ object TrainingDataQueries {
     * `replace` trick as t18 — merges apply greedily left-to-right,
     * identically on both engines, so the oracle unrolls learn+apply.
     *
-    * Scale shape: merges are learned on the VOCAB table (t18's
-    * argument), the corpus is touched exactly twice — once collapsing
-    * to (doc, word) occurrences, once joining the per-word token count
-    * back on the high-cardinality word key (broadcast-able: vocab ≪
-    * corpus; Spark's size estimate decides). No per-doc sequential
-    * loop anywhere — the merge loop is over the 5 RULES, not the
-    * data. */
+    * Scale shape: merges are learned on the VOCAB table by
+    * [[bpeLearn]], the corpus is touched exactly twice — once
+    * collapsing to (doc, word) occurrences, once joining the per-word
+    * token count back on the high-cardinality word key (broadcast-able:
+    * vocab ≪ corpus; Spark's size estimate decides). No per-doc
+    * sequential loop anywhere — the merge loop is over the 5 RULES,
+    * not the data. */
   def t21BpeEncode: Q = (spark, dir) => {
-    val nMerges = 5
-    val docWords = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-      .filter(length(col("word")) > 0)
-    var syms = docWords.groupBy("word").agg(count(lit(1)).as("wc"))
-      .select(col("word"), regexp_replace(col("word"), "(.)", "<$1>").as("sym"), col("wc"))
-    val pairsOf =
-      """CASE WHEN size(t) < 2 THEN array()
-        |ELSE transform(sequence(0, size(t) - 2),
-        |               i -> concat('<', t[i], '><', t[i + 1], '>')) END""".stripMargin
-    for (_ <- 1 to nMerges) {
-      val best = syms
-        .withColumn("t", split(expr("substring(sym, 2, length(sym) - 2)"), "><"))
-        .select(col("wc"), explode(expr(pairsOf)).as("pat"))
-        .groupBy("pat").agg(sum("wc").as("c"))
-        .orderBy(col("c").desc, col("pat").asc).limit(1)
-      syms = syms.crossJoin(broadcast(best))
-        .withColumn("sym", expr("replace(sym, pat, replace(pat, '><', ''))"))
-        .select("word", "sym", "wc")
-    }
+    val words = docWords(spark, dir)
+    val (_, syms) = bpeLearn(words, nMerges = 5)
     val perWord = syms.select(col("word"),
       size(split(expr("substring(sym, 2, length(sym) - 2)"), "><")).cast("long").as("n_tok"))
-    docWords.join(perWord, Seq("word"))
+    words.join(perWord, Seq("word"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("n_tok").as("n_bpe_tokens"))
       .orderBy("doc_id")

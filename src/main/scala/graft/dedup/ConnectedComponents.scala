@@ -54,26 +54,22 @@ object ConnectedComponents {
     val (raw, freeRaw) =
       cutR(edges.select(col(idCols._1).as("a"), col(idCols._2).as("b")))
 
-    // Size-adaptive small-graph path (r15, the broadcast-join
-    // principle: pick the execution strategy from the MEASURED input
-    // size). Each alternating round costs ~5 shuffles plus a digest
-    // job, so a pair graph of a few thousand edges pays seconds of
-    // pure round overhead for microseconds of actual work — the
-    // bench's cluster stage measured ~3.2 s FLAT from sf0.001 to sf1
-    // (near-dup pair graphs are sparse at every tested scale). Below
-    // `driverMaxEdges` RAW rows (so node count ≤ 2× the bound even
-    // when the input is mostly self-loops, as with d26's surrogate
-    // edges), collect the edge list and solve with a min-root
-    // union-find on the driver: the output — (id, min reachable id) —
-    // is a pure function of the edge SET, identical to the fixpoint
-    // of the star rounds, and the driver holds ≤ ~MBs. Long-typed ids
-    // only (every library caller); anything else, or any larger
-    // graph, takes the distributed rounds below unchanged.
-    val driverMaxEdges =
-      sys.props.get("graft.cc.driverMaxEdges").map(_.toLong).getOrElse(65536L)
+    // Measured-size small path (`etl.SmallPath`): each alternating
+    // round costs ~5 shuffles plus a digest job, so a pair graph of a
+    // few thousand edges pays seconds of round overhead for
+    // microseconds of work (near-dup pair graphs are sparse at every
+    // tested scale). At or below the bound in RAW rows (so node count
+    // ≤ 2× the bound even when the input is mostly self-loops, as
+    // with d26's surrogate edges), solve with a min-root union-find
+    // on the driver: the output — (id, min reachable id) — is a pure
+    // function of the edge SET, identical to the fixpoint of the star
+    // rounds. Long-typed ids only (every library caller); anything
+    // else, or any larger graph, takes the distributed rounds below
+    // unchanged.
     val longIds = raw.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && raw.count() <= driverMaxEdges) {
+    val small = if (longIds) graft.etl.SmallPath.collectBelow(raw) else None
+    if (small.isDefined) {
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
@@ -90,13 +86,13 @@ object ConnectedComponents {
         else if (ry < rx) parent(rx) = ry
       }
       val nodes = scala.collection.mutable.LongMap.empty[Boolean]
-      raw.collect().foreach { r =>
+      small.get.foreach { r =>
         val (a, b) = (r.getLong(0), r.getLong(1))
         nodes(a) = true; nodes(b) = true
         if (a != b) union(a, b)
       }
       // the collected edge list's blocks are dead weight now — the
-      // result below is driver-built (guide §5: unpersist when done)
+      // result is driver-built (guide §5: unpersist when done)
       freeRaw()
       val spark = edges.sparkSession
       import spark.implicits._

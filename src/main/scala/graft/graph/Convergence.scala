@@ -4,12 +4,14 @@ package graft.graph
   * ([[PageRank]], [[KCore]], [[LabelProp]], [[Hits]]).
   *
   * The ops run a FIXED round budget so a SQL oracle can unroll the
-  * exact same rounds — the driver never inspects data on the default
-  * path. But a fixed budget answers "is the budget enough?" with
-  * silence: this probe, passed opt-in, records how many rows each
-  * round actually changed (one |V|-linear count on frames the
-  * per-round checkpoint has ALREADY materialized — no extra pass over
-  * |E|) and lets the op STOP at the fixed point.
+  * exact same rounds — the distributed rounds never bring data to the
+  * driver to decide when to stop. But a fixed budget answers "is the
+  * budget enough?" with silence: this probe, passed opt-in, records
+  * how many rows each round actually changed (one |V|-linear count on
+  * frames the per-round checkpoint has ALREADY materialized — no extra
+  * pass over |E|) and lets the op STOP at the fixed point. [[Hits]]'
+  * measured-size small path (`graft.etl.SmallPath`) runs the same
+  * rounds on the driver and records the same counts.
   *
   * Early exit is output-invariant by the fixed-point argument: every
   * op's round is a pure function of the previous frame, so a round

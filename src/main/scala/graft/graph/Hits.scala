@@ -1,7 +1,11 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** HITS (Kleinberg, JACM'99) on a directed bipartite edge list —
   * mutually-recursive hub/authority scores: an authority is pointed
@@ -23,7 +27,14 @@ import org.apache.spark.sql.functions._
   * e6 resolution is ample for ranking). Fixed iteration
   * budget; per-iteration checkpoint holds the plan constant, with
   * the optional reliable `checkpointDir` shared by all graft graph
-  * ops. */
+  * ops.
+  *
+  * Measured-size small path ([[graft.etl.SmallPath]]): a distinct
+  * edge list at or below the bound runs the same rounds on the
+  * driver in Long math — the same truncating division (floor on
+  * these non-negative scores), `addExact`/`multiplyExact` so an
+  * overflow throws as it does under ANSI, the same per-round changed
+  * counts fed to `probe` — and returns the same rows. */
 object Hits {
 
   /** @param edges distinct directed pairs (src, dst)
@@ -38,7 +49,16 @@ object Hits {
     def cutR(df: DataFrame, eager: Boolean = true): (DataFrame, () => Unit) =
       graft.etl.Checkpoints.cutReleasable(df, eager,
         reliable = checkpointDir.isDefined)
-    val e = cutR(edges.select(col("src"), col("dst")).distinct())._1
+    // lazy cut: the probe's job (or, for non-Long ids, the first
+    // round's) materializes it
+    val (e, freeE) = cutR(edges.select(col("src"), col("dst")).distinct(), eager = false)
+    // Long ids only, as in ConnectedComponents (every library caller)
+    val longIds = e.schema.fields.forall(_.dataType == LongType)
+    val small = if (longIds) graft.etl.SmallPath.collectBelow(e) else None
+    if (small.isDefined) {
+      freeE()
+      return onDriver(e.sparkSession, small.get, e.schema("dst"), iterations, scale, probe)
+    }
     var hub = e.select(col("src")).distinct().select(col("src"), lit(1L).as("h"))
     var auth: DataFrame = null
     var prevAuth: DataFrame = null
@@ -96,5 +116,56 @@ object Hits {
         .select(col("src"), expr(s"hr * $scale div s").as("h"))
     }
     auth.select(col("dst"), col("a").as("auth_e6"))
+  }
+
+  /** The distributed rounds above, on the collected distinct edge
+    * list, returned as one partition (at most the bound's rows; a
+    * caller's ORDER BY then sorts in place instead of range-shuffling
+    * a local relation over three jobs). Join semantics carry over: a
+    * NULL key never joins, yet its group (a NULL `dst` fed by non-NULL
+    * sources, a NULL `src` fed by non-NULL targets) counts in the
+    * normalizing sum, and a NULL-`dst` authority is returned. */
+  private def onDriver(spark: SparkSession, rows: Array[Row], dst: StructField,
+                       iterations: Int, scale: Long,
+                       probe: Option[Convergence]): DataFrame = {
+    val edges = rows.map(r => (r.get(0), r.get(1)))
+    // Σ weight(from) over the edges, grouped by `to` (NULL group kept)
+    def spread(weight: collection.Map[Any, Long], from: ((Any, Any)) => Any,
+               to: ((Any, Any)) => Any): mutable.HashMap[Any, Long] = {
+      val out = mutable.HashMap.empty[Any, Long]
+      edges.foreach { ed =>
+        val k = from(ed)
+        if (k != null) weight.get(k).foreach { w =>
+          out(to(ed)) = Math.addExact(out.getOrElse(to(ed), 0L), w)
+        }
+      }
+      out
+    }
+    def normalize(raw: mutable.HashMap[Any, Long]): mutable.HashMap[Any, Long] = {
+      val s = raw.valuesIterator.foldLeft(0L)(Math.addExact)
+      raw.map { case (k, v) => k -> Math.multiplyExact(v, scale) / s }
+    }
+    var hub: collection.Map[Any, Long] = edges.map(_._1 -> 1L).toMap
+    var auth = mutable.HashMap.empty[Any, Long]
+    var prevAuth: mutable.HashMap[Any, Long] = null
+    var round = 1
+    var done = false
+    while (!done && round <= iterations) {
+      // the hub update of the previous round, computed only when a
+      // round reads it (the distributed hRaw is lazy the same way)
+      if (prevAuth != null) hub = normalize(spread(prevAuth, _._2, _._1))
+      auth = normalize(spread(hub, _._1, _._2))
+      done = probe.exists { p =>
+        val ch =
+          if (prevAuth == null) auth.size.toLong
+          else auth.count { case (k, a) => k != null && prevAuth.get(k).exists(_ != a) }.toLong
+        p.record(ch)
+        ch == 0L
+      }
+      prevAuth = auth
+      round += 1
+    }
+    spark.createDataFrame(auth.toSeq.map { case (k, a) => Row(k, a) }.asJava,
+      StructType(Seq(dst, StructField("auth_e6", LongType)))).coalesce(1)
   }
 }

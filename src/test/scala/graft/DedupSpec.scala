@@ -202,10 +202,9 @@ class DedupSpec extends AnyFunSuite {
   test("connected components converges on a 200-node path graph (O(log n) rounds)") {
     import graft.dedup.ConnectedComponents
     // force the DISTRIBUTED star rounds (this pin is about their
-    // convergence; the r15 small-graph driver path would otherwise
+    // convergence; the small-path driver union-find would otherwise
     // absorb the fixture)
-    sys.props("graft.cc.driverMaxEdges") = "0"
-    try {
+    TestSpark.withSmallPathBound(0) {
       val chain = (0L until 200L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("id1", "id2")
       val comps = ConnectedComponents.run(chain)
         .agg(countDistinct("comp"), count(lit(1)), min("comp"), max("comp"))
@@ -213,30 +212,38 @@ class DedupSpec extends AnyFunSuite {
       // diameter 199 ≫ the round budget of plain label propagation; the
       // large-star/small-star alternation collapses it logarithmically
       assert(comps == ((1L, 200L, 0L, 0L)))
-    } finally sys.props.remove("graft.cc.driverMaxEdges")
+    }
   }
 
   test("connected components: driver union-find path equals the distributed star rounds") {
     import graft.dedup.ConnectedComponents
     // adversarial mix: a path (worst diameter), a star, self-loops,
     // duplicate + reversed edges, and isolated-by-self-loop nodes —
-    // the r15 size-adaptive driver path must be row-identical to the
+    // the measured-size driver path must be row-identical to the
     // distributed fixpoint on the same edge SET
     val edges = ((0L until 50L).sliding(2).map(s => (s(0), s(1))).toSeq ++
       Seq((100L, 101L), (100L, 102L), (100L, 103L), (103L, 100L),
           (200L, 200L), (7L, 3L), (3L, 7L), (300L, 300L))).toDF("id1", "id2")
     val viaDriver = ConnectedComponents.run(edges)
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    sys.props("graft.cc.driverMaxEdges") = "0"
-    val viaRounds =
-      try ConnectedComponents.run(edges)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      finally { sys.props.remove("graft.cc.driverMaxEdges"); () }
+    val viaRounds = TestSpark.withSmallPathBound(0) {
+      ConnectedComponents.run(edges).orderBy("id").as[(Long, Long)].collect().toSeq
+    }
     assert(viaDriver == viaRounds,
       s"driver path diverged: $viaDriver vs $viaRounds")
     assert(viaDriver.toMap.get(200L) == Some(200L) &&
       viaDriver.toMap.get(300L) == Some(300L),
       "self-loop-only nodes must label themselves")
+    // the bound's edges: exactly the bound in raw rows takes the
+    // driver path, one row past it the rounds; zero rows, either
+    val n = edges.count()
+    def under(bound: Long, e: org.apache.spark.sql.DataFrame) =
+      TestSpark.withSmallPathBound(bound) {
+        ConnectedComponents.run(e).orderBy("id").as[(Long, Long)].collect().toSeq
+      }
+    assert(under(n, edges) == viaRounds && under(n - 1, edges) == viaRounds)
+    val none = edges.limit(0)
+    assert(under(0, none).isEmpty && under(TestSpark.DriverBound, none).isEmpty)
   }
 
   test("prefix-filtered jaccard self-join equals brute force (lossless)") {

@@ -188,10 +188,63 @@ class GraphSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("hits_chk").toString
     val e = Seq((1L, 100L), (2L, 100L), (3L, 100L), (1L, 200L), (2L, 300L))
       .toDF("src", "dst")
-    val local = Hits.authorities(e, iterations = 3).as[(Long, Long)].collect().toMap
-    val reliable = Hits.authorities(e, iterations = 3, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(reliable == local)
+    // the distributed rounds: the small path would absorb the fixture
+    TestSpark.withSmallPathBound(0) {
+      val local = Hits.authorities(e, iterations = 3).as[(Long, Long)].collect().toMap
+      val reliable = Hits.authorities(e, iterations = 3, checkpointDir = Some(dir))
+        .as[(Long, Long)].collect().toMap
+      assert(reliable == local)
+    }
+  }
+
+  /** HITS rows and per-round changed counts under one forced path. */
+  private def hitsUnder(bound: Long, e: org.apache.spark.sql.DataFrame,
+                        iterations: Int): (Set[org.apache.spark.sql.Row], Seq[Long]) =
+    TestSpark.withSmallPathBound(bound) {
+      val p = new graft.graph.Convergence
+      val rows = graft.graph.Hits.authorities(e, iterations = iterations, probe = Some(p))
+        .collect().toSet
+      (rows, p.changedPerRound)
+    }
+
+  test("HITS: the driver small path returns the distributed rows and per-round changes") {
+    // every fixture above, plus NULL keys: a NULL key never joins but
+    // its group counts in the normalizing sums, and src 4 (NULL
+    // targets only) leaves the hub set after round 1, so the NULL
+    // authority is present in round 1 only
+    val fixtures = Seq(
+      ("demand", Seq((1L, 100L), (2L, 100L), (3L, 100L), (1L, 200L)).toDF("src", "dst"), 3),
+      ("star", Seq((1L, 100L), (1L, 200L), (1L, 300L)).toDF("src", "dst"), 6),
+      ("checkpoint", Seq((1L, 100L), (2L, 100L), (3L, 100L), (1L, 200L), (2L, 300L))
+        .toDF("src", "dst"), 3),
+      ("nulls", Seq[(Option[Long], Option[Long])]((Some(1L), Some(100L)),
+        (Some(2L), Some(100L)), (None, Some(100L)), (Some(3L), None),
+        (Some(1L), Some(200L)), (Some(4L), None), (Some(2L), Some(200L)))
+        .toDF("src", "dst"), 4),
+      ("empty", Seq.empty[(Long, Long)].toDF("src", "dst"), 3))
+    for ((name, e, iters) <- fixtures) {
+      val distributed = hitsUnder(0L, e, iters)
+      val driver = hitsUnder(TestSpark.DriverBound, e, iters)
+      assert(driver == distributed, s"$name: driver $driver vs distributed $distributed")
+    }
+    // the edges SmallPath names: exactly the bound takes the driver
+    // path, one row past it the distributed rounds (demand: 4 edges)
+    val demand = fixtures.head._2
+    assert(hitsUnder(4L, demand, 3) == hitsUnder(3L, demand, 3))
+    assert(graft.etl.SmallPath.collectBelow(demand, 4L).map(_.length) == Some(4))
+    assert(graft.etl.SmallPath.collectBelow(demand, 3L).isEmpty)
+    assert(graft.etl.SmallPath.collectBelow(demand.limit(0), 0L).map(_.length) == Some(0))
+  }
+
+  test("HITS on d25's demand graph (sf0.001): both paths agree row for row and round for round") {
+    import org.apache.spark.sql.functions.col
+    val e = Tables.orders(spark, TestSpark.Sf).select("o_orderkey", "o_custkey")
+      .join(Tables.lineitem(spark, TestSpark.Sf).select("l_orderkey", "l_partkey"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("src"), col("l_partkey").as("dst"))
+    val (rows, changed) = hitsUnder(0L, e, 3)
+    assert(rows.nonEmpty && changed.length == 3, changed.toString)
+    assert(hitsUnder(TestSpark.DriverBound, e, 3) == ((rows, changed)))
   }
 
   test("k-core through a reliable checkpoint dir is identical to localCheckpoint") {

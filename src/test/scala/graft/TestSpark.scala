@@ -17,4 +17,16 @@ object TestSpark {
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** Run `body` with the small-path bound (`graft.smallPath.maxRows`)
+    * set to `rows`: 0 forces the distributed path of every kernel that
+    * has a driver path (an empty input excepted), a large value the
+    * driver path. */
+  def withSmallPathBound[T](rows: Long)(body: => T): T = {
+    sys.props("graft.smallPath.maxRows") = rows.toString
+    try body finally sys.props.remove("graft.smallPath.maxRows")
+  }
+
+  /** A bound no test input reaches. */
+  val DriverBound: Long = 1L << 30
 }

@@ -283,6 +283,67 @@ class TrainingDataSpec extends AnyFunSuite {
     assert(got == expect, s"got=$got want=$expect")
   }
 
+  /** Rows of `q` at `dir` with each path of the BPE learner forced:
+    * (distributed, driver). */
+  private def bpeBothPaths(q: Q, dir: String): (Seq[org.apache.spark.sql.Row],
+                                                Seq[org.apache.spark.sql.Row]) = {
+    def rows(bound: Long) = TestSpark.withSmallPathBound(bound) {
+      q(spark, dir).collect().toSeq
+    }
+    (rows(0L), rows(TestSpark.DriverBound))
+  }
+
+  test("t18/t21 BPE: the driver small path returns the distributed rows (sf0.001)") {
+    for ((name, q) <- Seq("t18" -> TrainingDataQueries.t18BpeMerges,
+                          "t21" -> TrainingDataQueries.t21BpeEncode)) {
+      val (distributed, driver) = bpeBothPaths(q, TestSpark.Sf)
+      assert(distributed.nonEmpty, name)
+      assert(driver == distributed, s"$name: the two paths diverged")
+    }
+  }
+
+  /** A documents table holding only `texts`, in a fresh directory. */
+  private def docsDir(texts: Seq[String]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "web", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(Tables.path(dir, "documents"))
+    dir
+  }
+
+  test("BPE degenerate vocabularies: pairs run out before merge 5, empty corpus, the bound's edges") {
+    // vocab {ab: 2, cd: 1, e: 3}: merges 1-2 use up every pair, so
+    // merge 3 has no argmax row and the distributed cross join empties
+    // the symbol table — the driver path must stop the same way
+    val short = docsDir(Seq("ab ab cd e", "e e"))
+    val (t18Rounds, t18Driver) = bpeBothPaths(TrainingDataQueries.t18BpeMerges, short)
+    assert(t18Driver == t18Rounds)
+    assert(t18Driver.map(r => (r.getLong(0), r.getString(1), r.getLong(2))) ==
+      Seq((1L, "<a><b>", 2L), (2L, "<c><d>", 1L)))
+    val (t21Rounds, t21Driver) = bpeBothPaths(TrainingDataQueries.t21BpeEncode, short)
+    assert(t21Driver == t21Rounds)
+    // only one-letter words: no pair at merge 1
+    val letters = docsDir(Seq("a b c", "a a"))
+    for (q <- Seq(TrainingDataQueries.t18BpeMerges, TrainingDataQueries.t21BpeEncode)) {
+      val (rounds, driver) = bpeBothPaths(q, letters)
+      assert(driver == rounds)
+    }
+    // zero words
+    val empty = docsDir(Seq("", "--"))
+    for (q <- Seq(TrainingDataQueries.t18BpeMerges, TrainingDataQueries.t21BpeEncode)) {
+      val (rounds, driver) = bpeBothPaths(q, empty)
+      assert(rounds.isEmpty && driver.isEmpty)
+    }
+    // exactly the bound (3 words: driver) and one past it (distributed)
+    val atBound = TestSpark.withSmallPathBound(3L) {
+      TrainingDataQueries.t18BpeMerges(spark, short).collect().toSeq
+    }
+    val pastBound = TestSpark.withSmallPathBound(2L) {
+      TrainingDataQueries.t18BpeMerges(spark, short).collect().toSeq
+    }
+    assert(atBound == t18Driver && pastBound == t18Driver)
+  }
+
   test("t19 corpus report matches a local per-source recomputation") {
     val got = TrainingDataQueries.t19CorpusReport(spark, TestSpark.Sf)
       .as[(String, Long, Long, Long, Long, String)].collect().toSet
