@@ -1162,8 +1162,7 @@ object LlmQueries {
   def s07AnnIvfPq: Q = (spark, dir) => {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
-    Ann.ivfPqTopK(e, e.filter(col("id") < 8), k = 10, seed = 17L,
-        cacheKey = Some(dir))
+    Ann.ivfPqTopK(e, e.filter(col("id") < 8), k = 10, seed = 17L)
       .orderBy("qid", "rank")
   }
 
@@ -1384,8 +1383,7 @@ object LlmQueries {
   def s03AnnIvf: Q = (spark, dir) => {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
-    Ann.ivfTopKAuto(e, e.filter(col("id") < 8), k = 10, seed = 42L,
-        cacheKey = Some(dir))
+    Ann.ivfTopKAuto(e, e.filter(col("id") < 8), k = 10, seed = 42L)
       .orderBy("qid", "rank")
   }
 
@@ -1405,7 +1403,7 @@ object LlmQueries {
       .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"),
         col("label"))
     Ann.filteredIvfTopKAuto(e, e.filter(col("id") < 8).select("id", "vec"),
-        k = 10, pred = col("label") === 3, seed = 42L, cacheKey = Some(dir))
+        k = 10, pred = col("label") === 3, seed = 42L)
       .orderBy("qid", "rank")
   }
 
@@ -1423,19 +1421,31 @@ object LlmQueries {
       .orderBy("qid", "rank")
   }
 
+  /** The IVF index s17 serves and s19 builds, and Bench's
+    * `stage:ann_fit` prices the fit of: the embeddings corpus as
+    * (id, vec), 23 cells, seed 42. One declaration, so the three share
+    * one memoized fit. */
+  private[graft] object IvfIndex {
+    val nCells = 23
+    val seed = 42L
+    def corpus(spark: SparkSession, dir: String): DataFrame =
+      Tables.embeddings(spark, dir)
+        .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
+  }
+
   /** #209 (s17): probe-sweep frontier
     * ([[graft.sim.AnnIndex.probeSweep]]) — the recall-vs-cost table a
     * serving owner reads before picking a latency budget: recall@10
     * per probe operating point against the persisted index, with the
-    * build-time calibrated point being one row of it. Rows-only
-    * (k-means + float recall inside); AnnSpec pins monotonicity and
-    * the full-probe recall-1.0 anchor. */
+    * build-time calibrated point being one row of it. The index is
+    * served ([[graft.sim.AnnIndex.served]]): built once per content of
+    * the embeddings table, so a repeated call runs only the sweep,
+    * which a corpus of this size runs on the driver. Rows-only
+    * (k-means + float recall inside); AnnSpec pins monotonicity, the
+    * full-probe recall-1.0 anchor and driver/distributed identity. */
   def s17ProbeSweep: Q = (spark, dir) => {
-    val idx = StageRoots.rootFor(dir) + "/ann_index_sweep"
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
-    graft.sim.AnnIndex.build(e, nCells = 23, seed = 42L, idx,
-      cacheKey = Some(dir))
+    val idx = graft.sim.AnnIndex.served(IvfIndex.corpus(spark, dir),
+      IvfIndex.nCells, IvfIndex.seed, StageRoots.rootFor(dir), "ann_index_sweep")
     graft.sim.AnnIndex.probeSweep(spark, idx, k = 10, sampleMod = 25)
       .orderBy("n_probe")
   }
@@ -1466,10 +1476,8 @@ object LlmQueries {
     * bit-identical probes + physical reclamation. */
   def s19AnnDelete: Q = (spark, dir) => {
     val idx = StageRoots.rootFor(dir) + "/ann_index_del"
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
-    graft.sim.AnnIndex.build(e, nCells = 23, seed = 42L, idx,
-      cacheKey = Some(dir))
+    val e = IvfIndex.corpus(spark, dir)
+    graft.sim.AnnIndex.build(e, IvfIndex.nCells, IvfIndex.seed, idx)
     graft.sim.AnnIndex.delete(e.filter(col("id") % 13 === 0).select("id"), idx)
     graft.sim.AnnIndex.probe(spark, idx, e.filter(col("id") < 8), k = 10)
       .orderBy("qid", "rank")
@@ -2052,7 +2060,7 @@ object LlmQueries {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
     Ann.hardNegativesIvf(e, k = 5, groups = roots, seed = 42L,
-        cacheKey = Some(dir), probeBudget = 16)
+        probeBudget = 16)
       .orderBy("id", "rank")
   }
 

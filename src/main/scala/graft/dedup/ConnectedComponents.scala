@@ -86,18 +86,29 @@ object ConnectedComponents {
         else if (ry < rx) parent(rx) = ry
       }
       val nodes = scala.collection.mutable.LongMap.empty[Boolean]
+      // the rounds' NULL semantics: a NULL id is one node of its own
+      // (`ids` keeps it) whose edges join nothing (`a =!= b` is NULL),
+      // labelled NULL; the other end of such an edge is still a node
+      var nullId = false
       small.get.foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        nodes(a) = true; nodes(b) = true
-        if (a != b) union(a, b)
+        if (r.isNullAt(0) || r.isNullAt(1)) {
+          nullId = true
+          (0 to 1).filterNot(r.isNullAt).foreach(i => nodes(r.getLong(i)) = true)
+        } else {
+          val (a, b) = (r.getLong(0), r.getLong(1))
+          nodes(a) = true; nodes(b) = true
+          if (a != b) union(a, b)
+        }
       }
       // the collected edge list's blocks are dead weight now — the
       // result is driver-built (guide §5: unpersist when done)
       freeRaw()
       val spark = edges.sparkSession
       import spark.implicits._
-      return nodes.keys.toSeq.sorted
-        .map(id => (id, find(id))).toDF("id", "comp")
+      val labelled: Seq[(Option[Long], Option[Long])] =
+        nodes.keys.toSeq.sorted.map(id => (Some(id), Some(find(id))))
+      return (if (nullId) labelled :+ ((None, None)) else labelled)
+        .toDF("id", "comp")
     }
 
     val ids = cut(raw.select(col("a").as("id"))

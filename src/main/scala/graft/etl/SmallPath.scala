@@ -4,15 +4,18 @@ import org.apache.spark.sql.{DataFrame, Row}
 
 /** The measured-size small path of the iterative kernels
   * (`dedup.ConnectedComponents`, `graph.Hits`, the BPE merge learner
-  * behind t18/t21/t24): the broadcast-join principle applied to a
-  * whole loop. Each distributed round costs a few shuffles and jobs
-  * whatever the input size, so an input of a few thousand rows pays
-  * seconds of job launches for microseconds of work. A kernel cuts
-  * its input, asks [[collectBelow]] for it, and solves on the driver
-  * when the rows come back; otherwise it runs its distributed rounds
-  * over the same cut, unchanged. Every caller's driver path returns
-  * the rows its distributed path returns (each kernel's spec forces
-  * both paths through the property below). */
+  * behind t18/t21/t24) and of `sim.AnnIndex.probeSweep`: the
+  * broadcast-join principle applied to a whole loop. Each distributed
+  * round costs a few shuffles and jobs whatever the input size, so an
+  * input of a few thousand rows pays seconds of job launches for
+  * microseconds of work. A kernel cuts its input, asks
+  * [[collectBelow]] for it, and solves on the driver when the rows
+  * come back; otherwise it runs its distributed rounds over the same
+  * cut, unchanged. The probe sweep's driver work grows as its rows
+  * squared, so it asks with a smaller cut derived from [[bound]].
+  * Every caller's driver path returns the rows its distributed path
+  * returns (each kernel's spec forces both paths through the property
+  * below). */
 private[graft] object SmallPath {
 
   /** Rows at or below which a kernel solves on the driver: the one

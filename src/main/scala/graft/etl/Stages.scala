@@ -68,6 +68,24 @@ object Stages {
   def stage(spark: SparkSession, root: String, name: String,
             partitionCols: Seq[String] = Nil)
            (build: => DataFrame): DataFrame = {
+    val dir = stageDir(spark, root, name) { tmp =>
+      val w = build.write
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp)
+    }
+    spark.read.parquet(dir)
+  }
+
+  /** The commit protocol of [[stage]] for a payload that is a whole
+    * directory: if `root/name` is committed (`_SUCCESS` present) `fill`
+    * is skipped, else `fill` writes the directory into a hidden
+    * `.name.inprogress-<uuid>` sibling, a `_SUCCESS` marker is added
+    * when `fill` left none (a parquet write leaves its own), and the
+    * sibling is renamed into place. Returns the committed directory.
+    * A half-written directory (no `_SUCCESS`) is rebuilt, never
+    * trusted; the race and sweep rules are [[stage]]'s. */
+  private[graft] def stageDir(spark: SparkSession, root: String, name: String)
+                             (fill: String => Unit): String = {
     val dir = new Path(root, name)
     val success = new Path(dir, "_SUCCESS")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -81,9 +99,9 @@ object Stages {
       if (fs.exists(dir) && !fs.exists(success)) fs.delete(dir, true)
       val tmp = new Path(root, s".$name.inprogress-${java.util.UUID.randomUUID}")
       try {
-        val w = build.write
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(tmp.toString)
+        fill(tmp.toString)
+        val marker = new Path(tmp, "_SUCCESS")
+        if (!fs.exists(marker)) fs.create(marker, false).close()
         // rename only while the target is absent: Hadoop rename ONTO an
         // existing directory does not fail — it nests tmp inside it (and
         // reports success), which would silently duplicate the stage
@@ -119,7 +137,7 @@ object Stages {
           if (!fs.exists(success)) throw e
       }
     }
-    spark.read.parquet(dir.toString)
+    dir.toString
   }
 
   /** Drop a committed stage so the next run rebuilds it (e.g. after a
@@ -205,9 +223,9 @@ object Stages {
     }
   }
 
-  /** Source-table digests by table path, each with the file snapshot
-    * (names, sizes, mtimes) it was computed over: a hit needs the same
-    * snapshot, so a table rewritten in place within a live session is
+  /** Source-table digests by table path, each with the file
+    * [[snapshot]] it was computed over: a hit needs the same snapshot,
+    * so a table rewritten in place within a live session is
     * re-digested on its next use — no clear hook. The listing is
     * metadata-only; the digest scan runs once per table version. */
   private val digests =
@@ -215,17 +233,25 @@ object Stages {
 
   private def sourceDigest(spark: SparkSession, dir: String,
                            source: String): String = {
-    val path = new Path(Tables.path(dir, source))
-    val it = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listFiles(path, true)
-    val snapshot = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-      .toSeq.sorted
-    Option(digests.get(path.toString)).filter(_._1 == snapshot).map(_._2)
+    val path = Tables.path(dir, source)
+    val snap = snapshot(spark, path)
+    Option(digests.get(path)).filter(_._1 == snap).map(_._2)
       .getOrElse {
         val d = contentDigest(Tables(spark, dir, source))
-        digests.put(path.toString, (snapshot, d))
+        digests.put(path, (snap, d))
         d
       }
+  }
+
+  /** The file snapshot of `path` (a file, or a directory listed
+    * recursively): (path, length, mtime) of every file, sorted. A
+    * rewrite in place changes it, so it keys what is derived from the
+    * files without a clear hook. Metadata-only. */
+  private[graft] def snapshot(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .toSeq.sorted
   }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
@@ -84,6 +84,13 @@ case class CentroidCells(left: Expression, right: Expression,
 }
 
 object CentroidCells {
+  /** [[CentroidCells.compute]] over fixed centroids, for a driver path
+    * that must order cells exactly as the plan does. */
+  private[graft] def onDriver(centroids: Seq[Seq[Double]],
+                              nProbe: Int): (ArrayData, Double) => ArrayData =
+    CentroidCells(Literal.create(null, ArrayType(DoubleType)), Literal(0.0),
+      centroids.map(_.toArray).toArray, nProbe).compute
+
   def centroidCells(vec: Column, nrm: Column, centroids: Seq[Seq[Double]],
                     nProbe: Int): Column =
     Bridge.column(CentroidCells(Bridge.expression(vec), Bridge.expression(nrm),

@@ -48,22 +48,14 @@ case class DotProduct(left: Expression, right: Expression)
   }
 
   /** Hot loop shared by interpreted eval and generated code. */
-  def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements()
-    // fail loudly on dimension mismatch — silently truncating would
-    // mask a wrong `dim` in LSH hyperplanes or a mixed-width corpus
-    // as quietly degraded recall
-    require(n == b.numElements(),
-      s"dot_product: mismatched vector lengths $n vs ${b.numElements()}")
-    var acc = 0.0
-    var i = 0
+  def compute(a: ArrayData, b: ArrayData): Double =
     if (isFloat) {
+      val n = DotProduct.dims(a, b)
+      var acc = 0.0
+      var i = 0
       while (i < n) { acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
-    } else {
-      while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
-    }
-    acc
-  }
+      acc
+    } else DotProduct.doubles(a, b)
 
   override def nullSafeEval(a: Any, b: Any): Any =
     compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -79,6 +71,26 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
+  /** The `array<double>` loop of [[DotProduct.compute]], for a driver
+    * path that must score bit-identically to the generated code. */
+  private[graft] def doubles(a: ArrayData, b: ArrayData): Double = {
+    val n = dims(a, b)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
+    acc
+  }
+
+  // fail loudly on dimension mismatch — silently truncating would
+  // mask a wrong `dim` in LSH hyperplanes or a mixed-width corpus
+  // as quietly degraded recall
+  private def dims(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    require(n == b.numElements(),
+      s"dot_product: mismatched vector lengths $n vs ${b.numElements()}")
+    n
+  }
+
   def dotProduct(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 }

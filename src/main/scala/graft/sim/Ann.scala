@@ -297,19 +297,19 @@ object Ann {
   // recall lands at or above target, never silently below.
 
   /** Per-JVM memo of corpus-derived OPERATING POINTS — counts, fitted
-    * quantizers, calibrated probe/buffer budgets — keyed by a
-    * caller-supplied corpus key. These are configuration-scale
-    * metadata (a few ints + √n-bounded codebooks, the in-memory
-    * analog of [[AnnIndex]]'s persisted `meta`/`centroids` tables):
-    * a serving path derives them once per corpus and READS them per
-    * query, it doesn't refit per call (the round-8 bench showed s07
-    * paying a full fit+calibrate on every invocation). Serving the
-    * memo is exact, not approximate — every cached value is a
-    * deterministic function of (corpus content, params), and a
-    * corpus at a given key is immutable within a run (the same
-    * assumption the staged artifacts make). A long-lived service
-    * that mutates a corpus under one key must [[clearOpCache]] or
-    * key by content digest. */
+    * quantizers, calibrated probe/buffer budgets — keyed by the
+    * corpus's content key ([[corpusKey]]) plus the caller's
+    * parameters. These are configuration-scale metadata (a few ints +
+    * √n-bounded codebooks, the in-memory analog of [[AnnIndex]]'s
+    * persisted `meta`/`centroids` tables): a serving path derives them
+    * once per corpus and READS them per query, it doesn't refit per
+    * call (the round-8 bench showed s07 paying a full fit+calibrate on
+    * every invocation). Serving the memo is exact, not approximate —
+    * every cached value is a deterministic function of (corpus
+    * content, params), and a corpus rewritten in place has a new key,
+    * so a caller never clears anything after a mutation. A frame with
+    * no content key (`None`: checkpointed, local) is derived per
+    * call. [[clearOpCache]] only frees memory. */
   private val opCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   private[graft] def clearOpCache(): Unit = opCache.clear()
@@ -318,6 +318,42 @@ object Ann {
       case Some(k) => opCache.computeIfAbsent(k, _ => build).asInstanceOf[T]
       case None    => build
     }
+
+  /** The content key of a corpus frame: a digest of its canonicalized
+    * analyzed plan (every field printed), the root paths of its file
+    * scans in plan order, and the file snapshot
+    * ([[graft.etl.Stages.snapshot]]) of its input files. Two frames
+    * that `sameResult` over the same files share it; a file rewritten
+    * in place, or a different derivation, gets a new key. None unless
+    * every leaf of the plan is a file scan and every expression is
+    * deterministic and built in: a checkpointed or local frame, or a
+    * user-defined function (printed by name only), has no content
+    * identity, so it is never memoized. Metadata-only. */
+  private[graft] def corpusKey(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.catalyst.expressions.UserDefinedExpression
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val plan = df.queryExecution.analyzed
+    val roots = plan.collectLeaves().map {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => Some(r.location.rootPaths.mkString(","))
+        case _ => None
+      }
+      case _ => None
+    }
+    val udf = plan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[UserDefinedExpression])))
+    if (roots.contains(None) || udf || !plan.deterministic) None
+    else {
+      val spark = df.sparkSession
+      val files = df.inputFiles.sorted.toSeq
+        .flatMap(f => graft.etl.Stages.snapshot(spark, f))
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      (plan.canonicalized.treeString(verbose = true, maxFields = Int.MaxValue) +:
+          (roots.flatten ++ files.map(_.toString)))
+        .foreach(x => md.update((x + "\n").getBytes("UTF-8")))
+      Some(md.digest().map("%02x".format(_)).mkString)
+    }
+  }
 
   private def dotA(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
@@ -467,8 +503,7 @@ object Ann {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int, seed: Long,
                 m: Int = 8, ksub: Int = 16, candMult: Int = 0,
                 fitSampleCap: Long = 8192L, maxCells: Int = 2048,
-                recall: Double = 0.9,
-                cacheKey: Option[String] = None): DataFrame = {
+                recall: Double = 0.9): DataFrame = {
     import graft.functions.{CentroidCells, ProductQuantizer, ResidualPq}
     import ProductQuantizer.{fit, pqAdc, pqLut}
     val live = corpus.withColumn("nrm", norm(col("vec"))).filter(col("nrm") > 0)
@@ -477,7 +512,7 @@ object Ann {
     // params): derived once per corpus key, read per query (the
     // round-8 bench's s07 regression was exactly this block re-run
     // per call)
-    val (coarseSeq, pqCb, nProbe, buf) = memo(cacheKey.map(c =>
+    val (coarseSeq, pqCb, nProbe, buf) = memo(corpusKey(corpus).map(c =>
         s"ivfpq|$c|k=$k|seed=$seed|m=$m|ksub=$ksub|cm=$candMult" +
           s"|cap=$fitSampleCap|mc=$maxCells|r=$recall")) {
       val n = live.count()
@@ -866,11 +901,10 @@ object Ann {
     * structure honestly calibrates toward more probes rather than
     * silently under-recalling. */
   def ivfTopKAuto(corpus: DataFrame, queries: DataFrame, k: Int,
-                  seed: Long, recall: Double = 0.9,
-                  cacheKey: Option[String] = None): DataFrame = {
+                  seed: Long, recall: Double = 0.9): DataFrame = {
     val live = corpus.withColumn("nrm0", norm(col("vec"))).filter(col("nrm0") > 0)
     val (centroids, nProbe) =
-      memo(cacheKey.map(c => s"ivfauto|$c|k=$k|seed=$seed|recall=$recall")) {
+      memo(corpusKey(corpus).map(c => s"ivfauto|$c|k=$k|seed=$seed|recall=$recall")) {
         val n = live.count()
         val nCells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
         val cs = fitCentroids(live, n, nCells, seed, fitSampleCap = 100000L)
@@ -911,14 +945,13 @@ object Ann {
     * exact FILTERED brute force and the probe-widening arithmetic. */
   def filteredIvfTopKAuto(corpus: DataFrame, queries: DataFrame, k: Int,
                           pred: org.apache.spark.sql.Column, seed: Long,
-                          recall: Double = 0.9,
-                          cacheKey: Option[String] = None): DataFrame = {
+                          recall: Double = 0.9): DataFrame = {
     val live = corpus.withColumn("nrm0", norm(col("vec"))).filter(col("nrm0") > 0)
     // the index-side operating point (count, quantizer, base probes) is
     // predicate-INDEPENDENT — one fit serves every filter; only the
     // survivor count below is per-predicate
     val (n, centroids, base) =
-      memo(cacheKey.map(c => s"ivffilt|$c|k=$k|seed=$seed|recall=$recall")) {
+      memo(corpusKey(corpus).map(c => s"ivffilt|$c|k=$k|seed=$seed|recall=$recall")) {
         val nn = live.count()
         val nCells = math.max(8, math.ceil(math.sqrt(nn.toDouble)).toInt)
         val cs = fitCentroids(live, nn, nCells, seed, fitSampleCap = 100000L)
@@ -1119,11 +1152,10 @@ object Ann {
     * recall@k against the exact brute-force graph. */
   def knnGraph(corpus: DataFrame, k: Int, seed: Long,
                fitSampleCap: Long = 100000L,
-               recallTarget: Option[Double] = None,
-               cacheKey: Option[String] = None): DataFrame = {
+               recallTarget: Option[Double] = None): DataFrame = {
     import graft.functions.CentroidCells.centroidCells
     val live = corpus.withColumn("nrm0", norm(col("vec"))).filter(col("nrm0") > 0)
-    val (centroids, nProbe) = memo(cacheKey.map(c =>
+    val (centroids, nProbe) = memo(corpusKey(corpus).map(c =>
         s"knn|$c|k=$k|seed=$seed|r=${recallTarget.getOrElse(-1.0)}|cap=$fitSampleCap")) {
       val n = live.count()
       val nCells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -1305,7 +1337,6 @@ object Ann {
   def hardNegativesIvf(corpus: DataFrame, k: Int, groups: DataFrame,
                        seed: Long, recall: Double = 0.9,
                        fitSampleCap: Long = 100000L,
-                       cacheKey: Option[String] = None,
                        probeBudget: Int = 0): DataFrame = {
     import graft.functions.CentroidCells.centroidCells
     val g = groups.select(col("id"), col("root"))
@@ -1313,17 +1344,20 @@ object Ann {
       .withColumn("nrm0", norm(col("vec"))).filter(col("nrm0") > 0)
     // the calibrated operating point depends on the GROUPS frame (its
     // p99 cluster size sets the exclusion depth), so the memo key must
-    // cover the groups' identity, not just the corpus key — two calls
+    // cover the groups' content, not just the corpus key — two calls
     // sharing a corpus but clustered differently must not serve each
-    // other's calibration. One linear content digest per call; the
-    // expensive fit behind it is still memoized.
-    val gDigest = cacheKey.map(_ => g
-      .agg(coalesce(expr("bit_xor(xxhash64(id, root))"), lit(0L)),
-        count(lit(1)))
-      .head() match { case r => s"${r.getLong(0)}x${r.getLong(1)}" })
-    val (centroids, solved) = memo(cacheKey.map(c =>
-        s"hni|$c|k=$k|seed=$seed|r=$recall|cap=$fitSampleCap" +
-          s"|g=${gDigest.get}")) {
+    // other's calibration. The groups are keyed by a content digest,
+    // not their files: a staged cluster table is rewritten under new
+    // file names by every fresh stage root, with the same rows. One
+    // linear digest per call; the expensive fit behind it is still
+    // memoized.
+    val key = corpusKey(corpus).map { c =>
+      val r = g.agg(coalesce(expr("bit_xor(xxhash64(id, root))"), lit(0L)),
+        count(lit(1))).head()
+      s"hni|$c|k=$k|seed=$seed|r=$recall|cap=$fitSampleCap" +
+        s"|g=${r.getLong(0)}x${r.getLong(1)}"
+    }
+    val (centroids, solved) = memo(key) {
       val n = live.count()
       val nCells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
       val cs = fitCentroids(live, n, nCells, seed, fitSampleCap)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.etl.{SmallPath, Stages}
+import graft.functions.{CentroidCells, DotProduct}
 import graft.functions.CentroidCells.centroidCells
 import graft.functions.VectorFunctions._
 import graft.sources.Writers
@@ -56,14 +58,15 @@ object AnnIndex {
   }
 
   /** The memoized fit + calibration shared by [[build]] and
-    * [[fitFrame]]: identical memo key, identical value, so whichever
-    * caller runs first pays the fit and the other serves it. `live`
-    * must already be the nrm-filtered frame [[build]] derives. */
+    * [[fitFrame]]: keyed on the content key of `live`
+    * ([[Ann.corpusKey]]) plus (nCells, seed, cap, recall), so over the
+    * same files whichever caller runs first pays the fit and the other
+    * serves it, and a corpus rewritten in place refits. `live` must
+    * already be the nrm-filtered frame [[build]] derives. */
   private def fitted(live: DataFrame, nCells: Int, seed: Long,
-                     fitSampleCap: Long, recall: Double,
-                     cacheKey: Option[String])
+                     fitSampleCap: Long, recall: Double)
       : (Long, Seq[Seq[Double]], Int) =
-    Ann.memo(cacheKey.map(c =>
+    Ann.memo(Ann.corpusKey(live).map(c =>
         s"annidxbuild|$c|cells=$nCells|seed=$seed|cap=$fitSampleCap|recall=$recall")) {
       val nn = live.count()
       val cs = Ann.fitCentroids(live, nn, nCells, seed, fitSampleCap)
@@ -78,10 +81,12 @@ object AnnIndex {
     * ~2.3 s fit — the fit cost landed wherever the key was first
     * touched in suite order). Same `live` derivation, same memo key,
     * bit-identical (n, centroids, probe) as [[build]]; a later build
-    * with the same (cacheKey, nCells, seed, cap, recall) skips the
-    * refit. Output: (cell, centroid, n, n_probe, recall_target) —
-    * nCells rows, the in-memory twin of the persisted
-    * centroids + meta tables. */
+    * over the same files with the same (nCells, seed, cap, recall)
+    * skips the refit. `cacheKey` is ignored (the memo keys on the
+    * corpus's content); it stays for callers that pass it by name.
+    * Output: (cell, centroid, n, n_probe, recall_target) — nCells
+    * rows, the in-memory twin of the persisted centroids + meta
+    * tables. */
   def fitFrame(corpus: DataFrame, nCells: Int, seed: Long,
                fitSampleCap: Long = 100000L, recall: Double = 0.9,
                cacheKey: Option[String] = None): DataFrame = {
@@ -90,7 +95,7 @@ object AnnIndex {
     val live = corpus.drop(SeqCol).withColumn(SeqCol, lit(0L))
       .withColumn("nrm", norm(col("vec"))).filter(col("nrm") > 0)
     val (n, centroids, calibratedProbe) =
-      fitted(live, nCells, seed, fitSampleCap, recall, cacheKey)
+      fitted(live, nCells, seed, fitSampleCap, recall)
     centroids.zipWithIndex
       .map { case (c, i) => (i, c, n, calibratedProbe, recall) }
       .toDF("cell", "centroid", "n", "n_probe", "recall_target")
@@ -104,7 +109,9 @@ object AnnIndex {
     * a 1-row `meta` table beside the centroids — a prober gets the
     * recall the builder certified without hand-tuning nProbe (pass an
     * explicit nProbe to override). Appends don't recalibrate; rebuild
-    * when the drift audit says so (see [[append]]). */
+    * when the drift audit says so (see [[append]]). The fit comes from
+    * the content-keyed memo [[fitFrame]] shares; `cacheKey` is ignored,
+    * as there. */
   def build(corpus: DataFrame, nCells: Int, seed: Long, dir: String,
             fitSampleCap: Long = 100000L, recall: Double = 0.9,
             cacheKey: Option[String] = None): Unit = {
@@ -121,12 +128,12 @@ object AnnIndex {
     // the quantizer + its calibration are configuration-scale metadata,
     // a deterministic function of (corpus content, params) — the same
     // contract [[Ann.ivfTopKAuto]]'s opCache serves: a caller building
-    // several indexes over one immutable corpus (or rebuilding per
-    // bench pass) derives them once and reuses (the ML k-means fit is
-    // the dominant fixed cost of a build — ~2.3 s at ANY corpus size
-    // once the sample cap binds, vs ~0.6 s for assignment + write)
+    // several indexes over one corpus (or rebuilding per bench pass)
+    // derives them once and reuses (the ML k-means fit is the dominant
+    // fixed cost of a build — ~2.3 s at ANY corpus size once the
+    // sample cap binds, vs ~0.6 s for assignment + write)
     val (n, centroids, calibratedProbe) =
-      fitted(live, nCells, seed, fitSampleCap, recall, cacheKey)
+      fitted(live, nCells, seed, fitSampleCap, recall)
     centroids.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cell", "centroid")
       .repartition(1)
@@ -144,6 +151,27 @@ object AnnIndex {
         element_at(centroidCells(col("vec"), col("nrm"), centroids, 1), 1))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
   }
+
+  /** The index [[build]] makes of `corpus`, for read-only consumers:
+    * staged once per content key ([[Ann.corpusKey]]) under
+    * `root/name-c<nCells>-s<seed>-<key>` through the
+    * [[graft.etl.Stages]] commit protocol, so a later call over the
+    * same files serves the committed directory without a write, and a
+    * corpus rewritten in place builds a new one. A corpus with no
+    * content key is built privately into `root/name` on every call.
+    * Returns the index directory. A consumer that writes into its
+    * index (tombstones, appends) builds its own. */
+  private[graft] def served(corpus: DataFrame, nCells: Int, seed: Long,
+                            root: String, name: String): String =
+    Ann.corpusKey(corpus) match {
+      case Some(key) =>
+        Stages.stageDir(corpus.sparkSession, root, s"$name-c$nCells-s$seed-$key")(
+          build(corpus, nCells, seed, _))
+      case None =>
+        val dir = s"$root/$name"
+        build(corpus, nCells, seed, dir)
+        dir
+    }
 
   /** Append a batch to an existing index WITHOUT refitting: assign the
     * new vectors against the PERSISTED centroids and append their
@@ -721,9 +749,10 @@ object AnnIndex {
   private def readCentroids(spark: SparkSession, dir: String): Seq[Seq[Double]] = {
     import spark.implicits._
     // nCells rows (≈ √n) — bounded driver read, the probe-side analog
-    // of the quantizer fit sample, NOT a corpus-scale collect
-    spark.read.parquet(s"$dir/centroids")
-      .orderBy("cell").select("centroid").as[Seq[Double]].collect().toSeq
+    // of the quantizer fit sample, NOT a corpus-scale collect; sorted
+    // here, where a Spark sort would add a sample and a shuffle job
+    spark.read.parquet(s"$dir/centroids").select("cell", "centroid")
+      .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2).toSeq
   }
 
   /** Top-k cosine neighbors for each query against a persisted index.
@@ -943,24 +972,41 @@ object AnnIndex {
     * candidate volume a probe at that point scans. This is the
     * capacity-planning table a serving owner reads before picking a
     * latency budget — the stored calibrated point (meta.n_probe) is
-    * ONE row of it. Driver loops over the handful of requested
-    * points; each is one Spark job over partition-pruned cells, and
-    * recall is computed DISTRIBUTED ([[maintain]]'s shape: the exact
-    * truth materializes once as a ≤ budget·k-row frame, each point is
-    * a join + 1-row aggregate) — the driver only ever holds the final
-    * ppm scalars, never a corpus-fraction pair set. Monotonicity
-    * (recall never decreases with probes) and the full-probe anchor
-    * (nProbe = nCells ⇒ recall 1.0 — probing every cell IS brute
-    * force) are spec-pinned. */
+    * ONE row of it. Monotonicity (recall never decreases with probes)
+    * and the full-probe anchor (nProbe = nCells ⇒ recall 1.0 — probing
+    * every cell IS brute force) are spec-pinned.
+    *
+    * Two paths, one result. The sweep scores about 2·n²/sampleMod
+    * pairs, so a live index of at most ⌊√(bound · sampleMod)⌋ rows
+    * ([[graft.etl.SmallPath]]'s bound; 1,280 at the default) is
+    * collected once and swept on the driver ([[sweepOnDriver]]), at
+    * the other small paths' scale of driver work and with no plan per
+    * operating point. A larger index is swept DISTRIBUTED
+    * ([[maintain]]'s shape: the exact truth materializes once as a
+    * ≤ budget·k-row frame, each point is a join + 1-row aggregate) —
+    * the driver only ever holds the final ppm scalars, never a
+    * corpus-fraction pair set. AnnSpec forces each path and asserts
+    * identical rows. */
   def probeSweep(spark: SparkSession, dir: String, k: Int = 10,
                  sampleMod: Int = 25,
                  probes: Seq[Int] = Nil,
                  sampleBudget: Long = 2048L): DataFrame = {
     import spark.implicits._
-    val nCells = spark.read.parquet(s"$dir/centroids").count().toInt
+    val centroids = readCentroids(spark, dir)
+    val nCells = centroids.length
     val points =
       if (probes.nonEmpty) probes
       else Seq(1, 2, 4, 8, nCells).distinct.filter(_ <= nCells).sorted
+    val cut = math.min(Int.MaxValue - 1L,
+      math.sqrt(SmallPath.bound.toDouble * sampleMod).toLong)
+    // one task reads at most cut + 1 rows: one job, where a bounded
+    // collect over the cell files scales up over several
+    val small = SmallPath.collectBelow(
+      liveCells(spark, dir).select("id", "vec", "nrm", "cell").coalesce(1), cut)
+    if (small.isDefined)
+      return sweepOnDriver(small.get, centroids, points, k, sampleMod, sampleBudget)
+        .map { case (p, ppm) => (p.toLong, ppm, nCells.toLong) }
+        .toDF("n_probe", "recall_ppm", "n_cells").coalesce(1).orderBy("n_probe")
     val corpus = liveCells(spark, dir).select("id", "vec")
     val n = corpus.count()
     val mod = Ann.auditSampleMod(n, sampleMod.toLong, sampleBudget)
@@ -987,7 +1033,6 @@ object AnnIndex {
     // crank ≤ p ∧ rnk_p ≤ k ∧ it's in the exact truth. One exchange,
     // the per-point windows reuse the same sort, no candidate-frame
     // materialization (scale-clean: nothing beyond the one shuffle).
-    val centroids = readCentroids(spark, dir)
     val cells = liveCells(spark, dir)
     val c = Ann.spreadCorpus(cells) // sort-parallelism guard (Ann.ivfProbe)
       .select(col("id").as("neighbor_id"), col("vec").as("cvec"),
@@ -1038,6 +1083,83 @@ object AnnIndex {
     points.zipWithIndex.map { case (p, i) =>
       (p.toLong, hits.getLong(i) * 1000000L / nTrue, nCells.toLong)
     }.toDF("n_probe", "recall_ppm", "n_cells").orderBy("n_probe")
+  }
+
+  /** [[probeSweep]]'s distributed rows, (n_probe, recall_ppm) per
+    * point, computed on the driver from the collected live cells
+    * (id, vec, nrm, cell). Each step is the plan's own arithmetic, not
+    * a re-derivation: the dot of [[graft.functions.DotProduct]], the
+    * cell order of [[graft.functions.CentroidCells]], `math.sqrt`
+    * norms (the stored `nrm` on the candidate side, recomputed on the
+    * exact side as [[Ann.bruteForceTopK]] does), the `pmod` id sample,
+    * SQL `> 0` (a NaN norm passes), `neighbor_id ≠ qid` (a NULL id
+    * never joins), Spark's double ordering then id ascending, the
+    * per-(query, cell) top-k prune and the left join to the exact
+    * truth (one row per matching truth row). */
+  private def sweepOnDriver(rows: Array[org.apache.spark.sql.Row],
+                            centroids: Seq[Seq[Double]], points: Seq[Int],
+                            k: Int, sampleMod: Int,
+                            sampleBudget: Long): Seq[(Int, Long)] = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+    final case class V(id: Long, vec: ArrayData, nrm: Double, cell: Int)
+    final case class Scored(nid: Long, sim: Double, crank: Int)
+    def positive(d: Double): Boolean = d > 0 || d.isNaN
+    def norm(v: ArrayData): Double = math.sqrt(DotProduct.doubles(v, v))
+    def cosine(q: V, qnrm: Double, c: V, cnrm: Double): Double =
+      DotProduct.doubles(q.vec, c.vec) / (qnrm * cnrm)
+    // (sim desc, neighbor_id asc) — the windows' order
+    val bySim: Ordering[Scored] = (a: Scored, b: Scored) => {
+      val c = SQLOrderingUtil.compareDoubles(b.sim, a.sim)
+      if (c != 0) c else java.lang.Long.compare(a.nid, b.nid)
+    }
+    val n = rows.length.toLong
+    // build stored a vec, nrm and cell on every row; a NULL id is
+    // counted in n but never sampled or joined
+    val vs = rows.filter(!_.isNullAt(0)).map(r => V(r.getLong(0),
+      UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray),
+      r.getDouble(2), r.getInt(3)))
+    val mod = Ann.auditSampleMod(n, sampleMod.toLong, sampleBudget)
+    val queries = vs.filter(v => java.lang.Math.floorMod(v.id, mod) == 0L)
+      .map(q => (q, norm(q.vec))).filter(q => positive(q._2))
+    // exact truth: (qid, neighbor_id) -> its rows in the top-k
+    val exactSide = vs.map(c => (c, norm(c.vec))).filter(c => positive(c._2))
+    val truth = scala.collection.mutable.HashMap.empty[(Long, Long), Int]
+    queries.foreach { case (q, qnrm) =>
+      exactSide.filter(_._1.id != q.id)
+        .map { case (c, cnrm) => Scored(c.id, cosine(q, qnrm, c, cnrm), 0) }
+        .sorted(bySim).take(k)
+        .foreach(s => truth((q.id, s.nid)) = truth.getOrElse((q.id, s.nid), 0) + 1)
+    }
+    val nTrue = truth.valuesIterator.sum.toLong
+    if (nTrue == 0L) return points.map(p => (p, 1000000L))
+    val byCell = vs.groupBy(_.cell)
+    val cellOrder = CentroidCells.onDriver(centroids, centroids.length)
+    val hits = new Array[Long](points.length)
+    queries.foreach { case (q, qnrm) =>
+      val order = cellOrder(q.vec, qnrm).toIntArray()
+      // the query's candidates by (cell, probe rank), each cell's k best
+      val kept = order.zipWithIndex.groupBy(_._1).toSeq.flatMap {
+        case (cell, ranks) =>
+          ranks.toSeq.flatMap { case (_, r) =>
+            byCell.getOrElse(cell, Array.empty[V]).toSeq.filter(_.id != q.id)
+              .map(c => Scored(c.id, cosine(q, qnrm, c, c.nrm), r + 1))
+          }.sorted(bySim.orElseBy(_.crank)).take(k)
+      }.flatMap { s =>
+        val m = truth.getOrElse((q.id, s.nid), 0)
+        Seq.fill(math.max(m, 1))((s, m > 0))
+      }.sortBy(_._1)(bySim.orElseBy(_.crank))
+      points.indices.foreach { i =>
+        var rnk = 0L
+        kept.foreach { case (s, hit) =>
+          if (s.crank <= points(i)) {
+            rnk += 1
+            if (hit && rnk <= k) hits(i) += 1
+          }
+        }
+      }
+    }
+    points.indices.map(i => (points(i), hits(i) * 1000000L / nTrue))
   }
 
   private def probeScored(spark: SparkSession, dir: String,

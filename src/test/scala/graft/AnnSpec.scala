@@ -1670,4 +1670,108 @@ class AnnSpec extends AnyFunSuite {
     assert(tailAudit(2L) < leadAudit(2L),
       s"tail-dim structure must hurt the prefix: $tailAudit vs $leadAudit")
   }
+
+  test("probeSweep: the driver sweep equals the distributed sweep, row for row") {
+    import graft.sim.AnnIndex
+    def sweep(dir: String, bound: Long, k: Int, sampleMod: Int,
+              probes: Seq[Int]): Seq[(Long, Long, Long)] =
+      TestSpark.withSmallPathBound(bound) {
+        AnnIndex.probeSweep(spark, dir, k, sampleMod, probes)
+          .as[(Long, Long, Long)].collect().toSeq
+      }
+    // the same rows with the driver path forced on and forced off
+    def same(what: String, dir: String, k: Int = 10, sampleMod: Int = 25,
+             probes: Seq[Int] = Nil): Seq[(Long, Long, Long)] = {
+      val onDriver = sweep(dir, TestSpark.DriverBound, k, sampleMod, probes)
+      val distributed = sweep(dir, 0L, k, sampleMod, probes)
+      assert(onDriver == distributed,
+        s"$what: driver $onDriver vs distributed $distributed")
+      onDriver
+    }
+    def built(corpus: org.apache.spark.sql.DataFrame): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_annidx_eq").toString
+      AnnIndex.build(corpus, nCells = 23, seed = 42L, dir)
+      dir
+    }
+    val sf01 = new java.io.File(TestSpark.Sf).getParent + "/sf0.01"
+    for (sf <- Seq(TestSpark.Sf, sf01)) {
+      val dir = built(Tables.embeddings(spark, sf)
+        .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec")))
+      val rows = same(s"$sf defaults", dir)
+      assert(rows.map(_._1) == Seq(1L, 2L, 4L, 8L, 23L) &&
+        rows.last._2 == 1000000L, s"$sf: $rows")
+      same(s"$sf k=5 sampleMod=10 probes 3,1,23,2", dir, k = 5, sampleMod = 10,
+        probes = Seq(3, 1, 23, 2))
+    }
+
+    // exactly the cut ⌊√(bound · sampleMod)⌋ = 500 live rows sweeps on
+    // the driver, one row past it distributed: same rows, fewer jobs
+    val dir = built(emb)
+    def jobsOf[T](body: => T): (T, Int) = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.sql.graft.TestBridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        org.apache.spark.sql.graft.TestBridge.drainListenerBus(sc)
+        (out, jobs.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    val reference = same("fresh index", dir)
+    val (atCut, cutJobs) = jobsOf(sweep(dir, 10000L, 10, 25, Nil))
+    val (pastCut, pastJobs) = jobsOf(sweep(dir, 9999L, 10, 25, Nil))
+    assert(atCut == reference && pastCut == reference)
+    assert(cutJobs < pastJobs,
+      s"the cut did not switch paths: $cutJobs jobs at it, $pastJobs past it")
+
+    // the index mutated in place: a delete, an upsert, an appended
+    // vector with a NaN component (its norm passes SQL `> 0`, its
+    // cosine sorts first), then every sampled id tombstoned
+    // (nTrue == 0 with live rows), then every row (an empty index)
+    AnnIndex.delete(emb.filter(col("id") % 7 === 0).select("id"), dir)
+    same("after a delete", dir)
+    AnnIndex.upsert(emb.filter(col("id") % 11 === 0)
+      .select(col("id"), reverse(col("vec")).as("vec")), dir)
+    same("after an upsert", dir)
+    val nan = emb.filter(col("id") === 1).select(lit(100001L).as("id"),
+      transform(col("vec"), (x, i) => when(i === 0, lit(Double.NaN)).otherwise(x))
+        .as("vec"))
+    AnnIndex.append(nan, dir)
+    same("a NaN component", dir, k = 5)
+    val noTruth = (Seq(1L, 2L, 4L, 8L, 23L)).map(p => (p, 1000000L, 23L))
+    AnnIndex.delete(emb.filter(pmod(col("id"), lit(25)) === 0).select("id"), dir)
+    assert(same("no sampled id live", dir) == noTruth)
+    AnnIndex.delete(emb.select("id").union(nan.select("id")), dir)
+    assert(same("every row tombstoned", dir) == noTruth)
+  }
+
+  test("s17 serves fresh rows after its corpus is rewritten in place, with no clear call") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val copy = Files.createTempDirectory("graft_s17_rewrite")
+    new java.io.File(TestSpark.Sf).listFiles.foreach(f =>
+      Files.copy(f.toPath, copy.resolve(f.getName)))
+    val dir = copy.toString
+    def s17(): Seq[(Long, Long, Long)] = LlmQueries.s17ProbeSweep(spark, dir)
+      .as[(Long, Long, Long)].collect().toSeq
+    val before = s17()
+    // rewrite embeddings.parquet in place without a third of its rows
+    val staged = copy.resolve("rewrite").toString
+    spark.read.parquet(s"$dir/embeddings.parquet")
+      .filter(col("vec_id") % 3 =!= 0).coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles.find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, copy.resolve("embeddings.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val after = s17()
+    Ann.clearOpCache()
+    StageRoots.reset()
+    val fresh = s17()
+    assert(after == fresh, s"stale rows after the rewrite: $after, fresh $fresh")
+    assert(after != before, s"the rewrite did not change the sweep: $before")
+  }
 }

@@ -244,6 +244,17 @@ class DedupSpec extends AnyFunSuite {
     assert(under(n, edges) == viaRounds && under(n - 1, edges) == viaRounds)
     val none = edges.limit(0)
     assert(under(0, none).isEmpty && under(TestSpark.DriverBound, none).isEmpty)
+    // a NULL id: its own NULL-labelled node, joined to nothing, on both
+    // paths (the other end of its edge still labels itself)
+    val withNull = Seq((Some(1L), Some(2L)), (None, Some(3L))).toDF("id1", "id2")
+    def labels(bound: Long) = TestSpark.withSmallPathBound(bound) {
+      ConnectedComponents.run(withNull).as[(Option[Long], Option[Long])]
+        .collect().toSeq.sortBy(_._1)
+    }
+    val expected = Seq((None, None), (Some(1L), Some(1L)), (Some(2L), Some(1L)),
+      (Some(3L), Some(3L)))
+    assert(labels(TestSpark.DriverBound) == expected && labels(0) == expected,
+      s"NULL id: driver ${labels(TestSpark.DriverBound)} vs rounds ${labels(0)}")
   }
 
   test("prefix-filtered jaccard self-join equals brute force (lossless)") {

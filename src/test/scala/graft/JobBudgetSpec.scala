@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graft.TestBridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,5 +41,22 @@ class JobBudgetSpec extends AnyFunSuite {
     val n = jobsOf(key)
     info(s"$key: $n jobs")
     assert(n <= budget, s"$key ran $n jobs, budget $budget")
+  }
+
+  // s17's warm call serves the index the first call staged and sweeps
+  // it on the driver (AnnIndex.served, AnnIndex.probeSweep): three
+  // parquet footer reads (embeddings, the index's centroids and
+  // cells), the centroid and cell collects and the noop write, and
+  // every class it needs is still in Spark's codegen cache
+  test("s17_probe_sweep's warm call runs at most 6 jobs and 0 codegen compiles") {
+    jobsOf("s17_probe_sweep")
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val n = jobsOf("s17_probe_sweep")
+    val compiled = compiles.getCount - before
+    info(s"s17_probe_sweep warm: $n jobs, $compiled compiles")
+    assert(n <= 6, s"s17_probe_sweep's warm call ran $n jobs, budget 6")
+    assert(compiled == 0,
+      s"s17_probe_sweep's warm call compiled $compiled classes, budget 0")
   }
 }
