@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.Readers
+
 /** Analytics extensions beyond the reference surface (eda.ipynb-style
   * summaries + the temporal operators a production events pipeline
   * needs). All oracle rules of SURVEY.md §6 apply.
@@ -1540,7 +1542,7 @@ object AnalyticsQueries {
     SketchStore.saveHistogram(ev, Seq("day", "event_type"), col("bucket"), 0,
       art, partitionCols = Seq("day"))
     def window(pred: org.apache.spark.sql.Column): DataFrame =
-      spark.read.parquet(art).filter(pred)
+      Readers.parquet(spark, art).filter(pred)
         .groupBy("event_type", "v").agg(sum("cnt").as("cnt"))
     SketchStore.tvDriftFromHistograms(
         window(col("day") <= "2024-01-15"), window(col("day") >= "2024-01-16"),

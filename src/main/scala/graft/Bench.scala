@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.sources.Readers
 object Bench {
   /** The bench session ([[GraftSession.local]]) + dataset dir, shared
     * with [[graft.streaming.StreamBench.main]]. */
@@ -13,9 +15,9 @@ object Bench {
     // JIT/classloading warm-up outside the timed region: one small
     // scan+agg+join exercises the codegen, parquet and shuffle paths
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val li = Readers.parquet(spark, s"$sfDir/lineitem.parquet")
       li.groupBy("l_returnflag").count().count()
-      val o = spark.read.parquet(s"$sfDir/orders.parquet")
+      val o = Readers.parquet(spark, s"$sfDir/orders.parquet")
       li.join(o, li("l_orderkey") === o("o_orderkey")).count()
     } catch { case _: Throwable => () }
     // Materialize through the noop sink: every operator in the plan

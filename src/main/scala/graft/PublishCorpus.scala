@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType}
 
+import graft.sources.Readers
+
 /** The corpus-PUBLISH flagship (#318) — the q17-of-the-LLM-family:
   * every step a training-data owner runs between "raw feed" and
   * "artifact a trainer consumes", composed as ONE staged, resumable
@@ -178,7 +180,7 @@ object PublishCorpus {
         (sum("tokens_in") - sum("tokens_out")).as("saved_tokens"))
     etl.SavingsLedger.append(savings, s"$outDir/_ledger", runLabel)
     Splits.map { s =>
-      spark.read.parquet(s"$outDir/$s/_manifest")
+      Readers.parquet(spark, s"$outDir/$s/_manifest")
         .withColumn("split", lit(s))
     }.reduce(_ unionByName _)
       .select("split", "shard", "n_docs", "n_tokens", "content_md5")

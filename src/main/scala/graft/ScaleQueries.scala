@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Skew
 import graft.functions.{BloomFilter, HeavyHitters}
-import graft.sources.Bucketing
+import graft.sources.{Bucketing, Readers}
 
 /** Scale-technique queries (SURVEY.md §2 #38, #44, #52) — operators
   * whose POINT is the execution strategy (sketching, salting,
@@ -320,7 +320,7 @@ object ScaleQueries {
         .select(to_date(col("ts")).as("day"), col("event_type"), col("value")),
       Seq("day", "event_type"), col("value"), valPow = 2, dir = art,
       partitionCols = Seq("day"))
-    val cur = spark.read.parquet(art)
+    val cur = Readers.parquet(spark, art)
       .filter(col("day") >= "2024-01-16")
       .groupBy("event_type", "v").agg(sum("cnt").as("cnt"))
     SketchStore.quantilesFromHistogram(cur, Seq("event_type"),
@@ -412,7 +412,7 @@ object ScaleQueries {
         .select(to_date(col("ts")).as("day"), col("event_type"), col("value")),
       Seq("day", "event_type"), col("value"), valPow = 2, dir = art,
       partitionCols = Seq("day"))
-    val weekly = spark.read.parquet(art)
+    val weekly = Readers.parquet(spark, art)
       .withColumn("week",
         date_format(date_trunc("week", col("day")), "yyyy-MM-dd"))
       .groupBy("week", "event_type", "v").agg(sum("cnt").as("cnt"))

@@ -4,11 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.sources.Readers
+
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * All readers go through the parquet DataSource V2 so Catalyst pushes
-  * filters and prunes columns into the scan — the 100 TB path is the
-  * same code, just a different directory.
+  * All readers go through [[sources.Readers.parquet]] (the schema is
+  * inferred once per file snapshot) so Catalyst pushes filters and
+  * prunes columns into the scan — the 100 TB path is the same code,
+  * just a different directory.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -27,7 +30,7 @@ object Tables {
     * columns can never hit the NTZ-rejecting functions
     * (`unix_micros`, typed timestamp comparisons) at analysis. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(path(dir, name))
+    val raw = Readers.parquet(spark, path(dir, name))
     val ntzCols = raw.schema.fields.collect {
       case f if f.dataType.isInstanceOf[TimestampNTZType] => f.name
     }

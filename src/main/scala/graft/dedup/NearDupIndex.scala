@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Readers
+
 /** Persistent near-dup admission index (#186) — the corpus side of the
   * streaming near-dup ingest gate ([[graft.streaming.EventStream
   * .nearDupGateForeachBatch]]) as a durable, APPENDABLE artifact, the
@@ -48,8 +50,8 @@ object NearDupIndex {
 
   /** (bands, sigs) as the gate expects them. */
   def load(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/bands").select("band", "bh", "cid"),
-      spark.read.parquet(s"$dir/sigs"))
+    (Readers.parquet(spark, s"$dir/bands").select("band", "bh", "cid"),
+      Readers.parquet(spark, s"$dir/sigs"))
 
   /** The streaming ingest gate served from the persisted index. */
   def gate(spark: SparkSession, dir: String)(
@@ -156,9 +158,9 @@ object NearDupIndex {
     // bands derive from the STORED signatures — one shingle pass total
     val sigSrc =
       if (append)
-        spark.read.parquet(s"$dir/sigs")
+        Readers.parquet(spark, s"$dir/sigs")
           .join(docs.select(col("doc_id").as("cid")), Seq("cid"), "left_semi")
-      else spark.read.parquet(s"$dir/sigs")
+      else Readers.parquet(spark, s"$dir/sigs")
     sigSrc
       .select(col("cid"),
         posexplode(MinHash.bandHashes(col("csig"), nBands, k))
@@ -168,7 +170,7 @@ object NearDupIndex {
   }
 
   private def readMeta(spark: SparkSession, dir: String): (Int, Int, Long) = {
-    val m = spark.read.parquet(s"$dir/meta").select("k", "n_bands", "seed").head()
+    val m = Readers.parquet(spark, s"$dir/meta").select("k", "n_bands", "seed").head()
     (m.getInt(0), m.getInt(1), m.getLong(2))
   }
 }

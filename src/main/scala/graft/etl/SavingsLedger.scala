@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Writers
+import graft.sources.{Readers, Writers}
 
 /** Persisted dedup-savings ledger (#189) — the nightly home for the
   * d29/d30 stage-savings frames: each pipeline run APPENDS its report
@@ -38,7 +38,7 @@ object SavingsLedger {
     * it is pinned back to string (lossless for ISO dates, identity
     * for everything else). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Readers.parquet(spark, dir)
       .withColumn("run_label", col("run_label").cast("string"))
 
   /** Run-over-run trend: for each key (e.g. `stage` or

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.{StageRoots, Tables}
+import graft.sources.Readers
 
 /** Staged checkpoints for multi-hour pipelines — the restart story the
   * reference gets from Airflow task boundaries (extract → transform →
@@ -73,7 +74,7 @@ object Stages {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(tmp)
     }
-    spark.read.parquet(dir)
+    Readers.parquet(spark, dir)
   }
 
   /** The commit protocol of [[stage]] for a payload that is a whole
@@ -203,9 +204,13 @@ object Stages {
     * is the [[graft.Tables]] table the artifact is a function of.
     *
     * By default the artifact is staged per JVM under
-    * [[graft.StageRoots.rootFor]]: a run shares one build across its
-    * consumers and a new process can never serve an old one, so no
-    * digest and no file listing is needed. With
+    * [[graft.StageRoots.rootFor]] as [[sharedName]]: the stage name
+    * keyed on a short hash of the source table's file [[snapshot]], so
+    * a run shares one build across its consumers, a new process can
+    * never serve an old one, and a table rewritten in place within the
+    * session addresses a stage that does not exist yet and rebuilds
+    * (nothing is deleted under a live reader). The key costs one
+    * metadata listing of the source per call; no digest scan. With
     * [[graft.StageRoots.durableBase]] set it is [[stageDurable]] under
     * the durable root, guarded by the content digest of the WHOLE
     * source table — a nightly over an unchanged table reads the last
@@ -216,11 +221,23 @@ object Stages {
     require(Tables.names.contains(source), s"unknown source table '$source'")
     StageRoots.durableRootFor(dir) match {
       case None =>
-        stage(spark, StageRoots.rootFor(dir), name, partitionCols)(build)
+        stage(spark, StageRoots.rootFor(dir), sharedName(spark, dir, source, name),
+          partitionCols)(build)
       case Some(root) =>
         stageDurable(spark, root, name, sourceDigest(spark, dir, source),
           partitionCols)(build)
     }
+  }
+
+  /** The per-JVM stage name of a [[shared]] artifact: `name-<hash of
+    * the source table's file snapshot>` (a missing table hashes as
+    * empty; its build fails as it would unkeyed). */
+  private[graft] def sharedName(spark: SparkSession, dir: String, source: String,
+                                name: String): String = {
+    val snap =
+      try snapshot(spark, Tables.path(dir, source))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    s"$name-${snapshotHash(snap)}"
   }
 
   /** Source-table digests by table path, each with the file
@@ -253,5 +270,15 @@ object Stages {
     Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
       .toSeq.sorted
+  }
+
+  /** A short digest of a file [[snapshot]] (any order): the key of
+    * what is derived from those files. */
+  private[graft] def snapshotHash(files: Seq[(String, Long, Long)]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.sorted.foreach { case (p, len, mtime) =>
+      md.update(s"$p\t$len\t$mtime\n".getBytes("UTF-8"))
+    }
+    md.digest().take(8).map("%02x".format(_)).mkString
   }
 }

@@ -9,7 +9,7 @@ import graft.etl.{SmallPath, Stages}
 import graft.functions.{CentroidCells, DotProduct}
 import graft.functions.CentroidCells.centroidCells
 import graft.functions.VectorFunctions._
-import graft.sources.Writers
+import graft.sources.{Readers, Writers}
 
 /** Persistent IVF index: build once, probe many — the production ANN
   * lifecycle ([[Ann.ivfTopK]] refits its coarse quantizer on every
@@ -48,7 +48,7 @@ object AnnIndex {
     val p = new Path(s"$dir/gen")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0L
-    else spark.read.parquet(p.toString).head().getLong(0)
+    else Readers.parquet(spark, p.toString).head().getLong(0)
   }
 
   private def writeGen(spark: SparkSession, dir: String, g: Long): Unit = {
@@ -293,16 +293,16 @@ object AnnIndex {
     if (tombFiles.isEmpty) return 0L
     val cells = cellsPath(dir)
     val (nAll, nLive) = Writers.replaceDir(fs, cells, purgeStaging(cells)) { tmp =>
-      val nAll = spark.read.parquet(cells.toString).count()
-      val mask = spark.read.parquet(tombFiles.map(_.toString): _*)
+      val nAll = Readers.parquet(spark, cells.toString).count()
+      val mask = Readers.parquet(spark, tombFiles.map(_.toString): _*)
         .groupBy("id").agg(max("upto_seq").as("__graft_tomb_seq"))
-      spark.read.parquet(cells.toString)
+      Readers.parquet(spark, cells.toString)
         .join(mask, Seq("id"), "left")
         .filter(col("__graft_tomb_seq").isNull ||
           col(SeqCol) > col("__graft_tomb_seq"))
         .drop("__graft_tomb_seq")
         .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-      (nAll, spark.read.parquet(tmp.toString).count())
+      (nAll, Readers.parquet(spark, tmp.toString).count())
     }
     // clear ONLY the snapshot's files, only after the swap commits (a
     // crash in between re-masks already-purged ids — anti-join no-op)
@@ -355,7 +355,7 @@ object AnnIndex {
     val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
     healPurge(spark, dir)
     healInterruptedSplit(spark, dir)
-    val cells = spark.read.parquet(s"$dir/cells")
+    val cells = Readers.parquet(spark, s"$dir/cells")
     val files =
       if (fs.exists(tomb)) tombstoneFiles(fs, tomb)
       else Array.empty[Path]
@@ -366,7 +366,7 @@ object AnnIndex {
       // usually sliver-sized (AQE broadcasts it), but a mass-delete
       // history can grow it past broadcast budget — let the planner
       // decide instead of forcing an OOM
-      val mask = spark.read.parquet(files.map(_.toString): _*)
+      val mask = Readers.parquet(spark, files.map(_.toString): _*)
         .groupBy("id").agg(max("upto_seq").as("__graft_tomb_seq"))
       cells.join(mask, Seq("id"), "left")
         .filter(col("__graft_tomb_seq").isNull ||
@@ -421,7 +421,7 @@ object AnnIndex {
       .agg(count(lit(1)).as("n"), sum(coalesce(col("hit"), lit(0L))).as("h"))
       .as[(Long, Long)].head()
     val recallPpm = if (nTrue == 0) 1000000L else nHit * 1000000L / nTrue
-    val meta = spark.read.parquet(s"$dir/meta")
+    val meta = Readers.parquet(spark, s"$dir/meta")
       .select("recall_target", "n_cells").head()
     val floor =
       if (floorPpm >= 0) floorPpm
@@ -482,7 +482,7 @@ object AnnIndex {
                     maxMultiple: Long = 3L): HotCell = {
     val spark2 = spark
     import spark2.implicits._
-    val nCells = spark.read.parquet(s"$dir/centroids").count()
+    val nCells = Readers.parquet(spark, s"$dir/centroids").count()
     val pops = liveCells(spark, dir).groupBy("cell")
       .agg(count(lit(1)).as("n")).select("n").as[Long].collect()
     val nVec = pops.sum
@@ -586,7 +586,7 @@ object AnnIndex {
     // a reader's healer must never touch it (see healInterruptedSplit)
     val tmp = new Path(dir, SplitTmp)
     fs.delete(tmp, true)
-    val nCells0 = spark.read.parquet(s"$dir/centroids").count().toInt
+    val nCells0 = Readers.parquet(spark, s"$dir/centroids").count().toInt
     val pops = liveCells(spark, dir).groupBy("cell")
       .agg(count(lit(1)).as("n")).as[(Int, Long)].collect()
     val nVec = pops.map(_._2).sum
@@ -640,7 +640,7 @@ object AnnIndex {
       .repartition(1).write.mode("overwrite").parquet(s"${tmp.toString}/centroids")
     // meta rides along so n_cells stays truthful; the calibrated
     // n_probe operating point is preserved (see scaladoc)
-    scala.util.Try(spark.read.parquet(s"$dir/meta").head()).foreach { m =>
+    scala.util.Try(Readers.parquet(spark, s"$dir/meta").head()).foreach { m =>
       Seq((m.getDouble(0), m.getInt(1), m.getLong(2), updated.length))
         .toDF("recall_target", "n_probe", "n", "n_cells")
         .repartition(1).write.mode("overwrite").parquet(s"${tmp.toString}/meta")
@@ -731,7 +731,7 @@ object AnnIndex {
   def stats(spark: SparkSession, dir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val nCells = spark.read.parquet(s"$dir/centroids").count().toInt
+    val nCells = Readers.parquet(spark, s"$dir/centroids").count().toInt
     val populated = liveCells(spark, dir)
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .select("n").as[Long].collect()
@@ -751,7 +751,7 @@ object AnnIndex {
     // nCells rows (≈ √n) — bounded driver read, the probe-side analog
     // of the quantizer fit sample, NOT a corpus-scale collect; sorted
     // here, where a Spark sort would add a sample and a shuffle job
-    spark.read.parquet(s"$dir/centroids").select("cell", "centroid")
+    Readers.parquet(spark, s"$dir/centroids").select("cell", "centroid")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2).toSeq
   }
 
@@ -766,7 +766,7 @@ object AnnIndex {
     val probes =
       if (nProbe > 0) nProbe
       else
-        try spark.read.parquet(s"$dir/meta").select("n_probe").head().getInt(0)
+        try Readers.parquet(spark, s"$dir/meta").select("n_probe").head().getInt(0)
         catch { case scala.util.control.NonFatal(_) =>
           math.max(3, math.ceil(math.sqrt(centroids.length.toDouble)).toInt)
         }
@@ -800,7 +800,7 @@ object AnnIndex {
                     k: Int, pred: org.apache.spark.sql.Column): DataFrame = {
     val centroids = readCentroids(spark, dir)
     val base =
-      try spark.read.parquet(s"$dir/meta").select("n_probe").head().getInt(0)
+      try Readers.parquet(spark, s"$dir/meta").select("n_probe").head().getInt(0)
       catch { case scala.util.control.NonFatal(_) =>
         math.max(3, math.ceil(math.sqrt(centroids.length.toDouble)).toInt)
       }
@@ -944,7 +944,7 @@ object AnnIndex {
       if (nProbe > 0) nProbe
       else {
         val recall =
-          try spark.read.parquet(s"$dir/meta")
+          try Readers.parquet(spark, s"$dir/meta")
             .select("recall_target").head().getDouble(0)
           catch { case scala.util.control.NonFatal(_) => 0.9 }
         val solved = Ann.probesForRecall(
@@ -1169,7 +1169,7 @@ object AnnIndex {
     val probes =
       if (nProbe > 0) nProbe
       else
-        try spark.read.parquet(s"$dir/meta").select("n_probe").head().getInt(0)
+        try Readers.parquet(spark, s"$dir/meta").select("n_probe").head().getInt(0)
         catch { case scala.util.control.NonFatal(_) =>
           math.max(3, math.ceil(math.sqrt(centroids.length.toDouble)).toInt)
         }

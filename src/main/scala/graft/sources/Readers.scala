@@ -1,14 +1,21 @@
 package graft.sources
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
+
+import graft.etl.Stages
 
 /** Source readers mirroring the reference's extract stage
   * (dags/etl_grammy_spotify.py:38-67: CSV file + SQL table).
   *
   * Always pass an explicit schema for CSV at scale: schema inference
   * is a full extra pass over the data. Parquet/JDBC carry their own
-  * schemas.
+  * schemas, but reading a parquet schema is a Spark job over the
+  * footers: [[parquet]] runs it once per file snapshot.
   */
 object Readers {
 
@@ -27,8 +34,80 @@ object Readers {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(path)
 
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Parquet without a schema: the one schema-less parquet read. A
+    * plain `spark.read.parquet` runs a Spark job to read a footer on
+    * every call; this one infers the schema once per (paths, the
+    * session's values of the confs inference reads, file snapshot) and
+    * then reads with `.schema(s)`, so a warm read runs no job. The
+    * snapshot is the (path, length, mtime) of every file the read's own
+    * file index lists (`_metadata`/`_common_metadata` included), so a
+    * hit lists nothing extra, and a table rewritten in place is
+    * re-inferred with no clear hook. The frame, schema and plan are
+    * `spark.read.parquet`'s; the memo holds the raw file schema. A
+    * failing read fails as `spark.read.parquet` does, on every call
+    * (failures are never memoized). The memo is a fixed-size LRU:
+    * state directories mint new paths on every pass.
+    *
+    * Blind spot, shared with the stage digest cache and
+    * `Ann.corpusKey`: a foreign writer that rewrites a file in place at
+    * equal length within one mtime tick keeps the snapshot. Spark's
+    * own writes never do (their part-file names carry a per-write
+    * UUID). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val key = (paths.toVector, inferenceConfs(spark))
+    Option(schemas.synchronized(schemas.get(key)))
+      .flatMap { case (snap, schema) =>
+        Try(spark.read.schema(schema).parquet(paths: _*)).toOption
+          .filter(df => fileRelation(df).flatMap(snapshotHash).contains(snap))
+      }
+      .getOrElse {
+        val df = spark.read.parquet(paths: _*)
+        // memoize only a schema a `.schema(s)` read lays out the same
+        // way: data columns, then partition columns (a file that also
+        // stores a partition column keeps it at its file position)
+        fileRelation(df)
+          .filter(r => (r.dataSchema ++ r.partitionSchema) == r.schema.fields.toSeq)
+          .flatMap(snapshotHash)
+          .foreach(snap => schemas.synchronized(schemas.put(key, (snap, df.schema))))
+        df
+      }
+  }
+
+  /** Most (paths, confs) keys [[parquet]] remembers. */
+  private[graft] val SchemaMemoCapacity = 256
+
+  private type SchemaKey = (Vector[String], Vector[(String, String)])
+
+  private val schemas = new java.util.LinkedHashMap[SchemaKey, (String, StructType)](
+      16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[SchemaKey, (String, StructType)]): Boolean =
+      size() > SchemaMemoCapacity
+  }
+
+  private[graft] def schemaMemoSize: Int = schemas.synchronized(schemas.size())
+
+  /** The session's values of the confs parquet schema inference reads. */
+  private def inferenceConfs(spark: SparkSession): Vector[(String, String)] =
+    spark.conf.getAll.iterator.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.sources.partitionColumnTypeInference.enabled" ||
+        k == "spark.sql.caseSensitive" || k == "spark.sql.files.ignoreCorruptFiles"
+    }.toVector.sorted
+
+  private def fileRelation(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation]
+    }
+
+  /** The hashed file snapshot of the listing `r`'s file index made. */
+  private def snapshotHash(r: HadoopFsRelation): Option[String] = r.location match {
+    case idx: PartitioningAwareFileIndex =>
+      Some(Stages.snapshotHash(idx.allFiles().map(st =>
+        (st.getPath.toString, st.getLen, st.getModificationTime))))
+    case _ => None
+  }
 
   /** ORC — the other columnar format Spark ships natively; same
     * pushdown/pruning behavior as parquet (PushedFilters + ReadSchema

@@ -34,7 +34,7 @@ object SketchStore {
 
   def loadBloom(spark: SparkSession, dir: String): BloomFilter.Filter = {
     import spark.implicits._
-    val (words, nh) = spark.read.parquet(dir)
+    val (words, nh) = Readers.parquet(spark, dir)
       .select("words", "num_hashes").as[(Seq[Long], Int)].head()
     BloomFilter.Filter(words.toArray, nh)
   }
@@ -106,7 +106,7 @@ object SketchStore {
   def mergeHistograms(spark: SparkSession, dirs: Seq[String],
                       groupCols: Seq[String]): DataFrame = {
     require(dirs.nonEmpty, "no histogram artifacts to merge")
-    dirs.map(spark.read.parquet(_))
+    dirs.map(Readers.parquet(spark, _))
       .reduce(_.unionByName(_))
       .groupBy((groupCols :+ "v").map(col): _*)
       .agg(sum("cnt").as("cnt"))
@@ -139,7 +139,7 @@ object SketchStore {
   def unionHll(spark: SparkSession, dirs: Seq[String],
                groupCols: Seq[String]): DataFrame = {
     require(dirs.nonEmpty, "no HLL artifacts to merge")
-    dirs.map(spark.read.parquet(_))
+    dirs.map(Readers.parquet(spark, _))
       .reduce(_.unionByName(_))
       .groupBy(groupCols.map(col): _*)
       .agg(hll_sketch_estimate(hll_union_agg(col("hll_sk"))).as("approx_distinct"),
@@ -182,7 +182,7 @@ object SketchStore {
     require(dirs.nonEmpty, "no top-k artifacts to merge")
     import spark.implicits._
     val parts = dirs.map { d =>
-      val rows = spark.read.parquet(d)
+      val rows = Readers.parquet(spark, d)
         .select(col("item"), col("cnt"), col("capacity"))
         .as[(String, Long, Int)].collect()
       val cap = rows.headOption.map(_._3).getOrElse(0)
@@ -238,7 +238,7 @@ object SketchStore {
   def mergeTopKGroups(spark: SparkSession, dir: String, k: Int,
                       groupPred: Column): Seq[(String, Long)] = {
     import spark.implicits._
-    val rows = spark.read.parquet(dir)
+    val rows = Readers.parquet(spark, dir)
       .filter(groupPred)
       .select(col("grp").cast(org.apache.spark.sql.types.StringType),
         col("item"), col("cnt"), col("capacity"))
@@ -263,7 +263,7 @@ object SketchStore {
   def mergeTopKRollup(spark: SparkSession, dir: String, k: Int,
                       rollup: String => String): Seq[(String, String, Long)] = {
     import spark.implicits._
-    val rows = spark.read.parquet(dir)
+    val rows = Readers.parquet(spark, dir)
       .select(col("grp").cast(org.apache.spark.sql.types.StringType),
         col("item"), col("cnt"), col("capacity"))
       .as[(String, String, Long, Int)].collect()
@@ -323,7 +323,7 @@ object SketchStore {
   def mergedCms(spark: SparkSession, dir: String, groupPred: Column)
       : (org.apache.spark.util.sketch.CountMinSketch, Long) = {
     import org.apache.spark.util.sketch.CountMinSketch
-    val rows = spark.read.parquet(dir).filter(groupPred)
+    val rows = Readers.parquet(spark, dir).filter(groupPred)
       .select(col("cms"), col("n_items"), col("eps_e6"), col("seed"))
       .collect()
     require(rows.nonEmpty, "no CMS artifact groups match the range")
@@ -457,7 +457,7 @@ object SketchStore {
     * fail loudly — the cells don't line up. */
   def mergedCmsCells(spark: SparkSession, dir: String,
                      groupPred: Column): (DataFrame, Int, Int) = {
-    val rows = spark.read.parquet(dir).filter(groupPred)
+    val rows = Readers.parquet(spark, dir).filter(groupPred)
     val params = rows.select("depth", "width").distinct()
       .collect().map(r => (r.getInt(0), r.getInt(1)))
     require(params.nonEmpty, "no cell-grid groups match the range")

@@ -216,12 +216,14 @@ object Writers {
           md5(concat_ws("",
             transform(array_sort(collect_list(struct(col("seq"), col("__h")))),
               x => x.getField("__h"))).cast("binary")).as("content_md5"))
-      manifest.repartition(1).write.mode(SaveMode.Overwrite)
-        .parquet(new Path(tmp, "_manifest").toString)
-      // coalesce: sum over an empty manifest is NULL, not 0
-      val r = manifest.agg(count(lit(1)),
-        coalesce(sum("n_docs"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+      val manifestDir = new Path(tmp, "_manifest").toString
+      manifest.repartition(1).write.mode(SaveMode.Overwrite).parquet(manifestDir)
+      // count from the one-file manifest just written (one row per
+      // shard), read with the schema it was written with, instead of
+      // re-aggregating every shard
+      val nDocs = spark.read.schema(manifest.schema).parquet(manifestDir)
+        .select("n_docs").collect().map(_.getLong(0))
+      (nDocs.length.toLong, nDocs.sum)
     }
   }
 
@@ -249,7 +251,7 @@ object Writers {
       val files = listFiles(fs, target)(isDataFile)
       val nOut = math.max(1,
         math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-      val df0 = spark.read.parquet(path)
+      val df0 = Readers.parquet(spark, path)
       val df = if (partitionBy.nonEmpty) df0.repartition(nOut, partitionBy.map(col): _*)
                else df0.repartition(nOut)
       parquet(df, tmp.toString, partitionBy)
@@ -312,7 +314,7 @@ object Writers {
         val tmp = hiddenSibling(dir, "compact-small-inprogress")
         fs.delete(tmp, true)
         // coalesce, not repartition: merging needs no shuffle
-        spark.read.parquet(smalls.map(_.getPath.toString): _*)
+        Readers.parquet(spark, smalls.map(_.getPath.toString): _*)
           .coalesce(nOut)
           .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
         val marker = new Path(dir, "_graft_compaction_pending")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{window => timeWindow, _}
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
+import graft.sources.Readers
+
 /** Structured Streaming events pipeline (SURVEY.md §2 #33): the
   * streaming twin of `q14_time_window_agg`.
   *
@@ -901,7 +903,7 @@ object EventStream {
       import spark.implicits._
       triDir = Some(s"$stateDir/v$v")
       lastBatch = v
-      spark.read.parquet(s"$stateDir/grp_v$v")
+      Readers.parquet(spark, s"$stateDir/grp_v$v")
         .as[(String, Long, Long)].collect()
         .foreach { case (s, nk, n) => grpCounts((s, nk)) = n }
     }
@@ -918,7 +920,7 @@ object EventStream {
           col("nationkey").cast("long").as("nationkey"),
           col("bal_cents").cast("long").as("bal_cents"))
         val merged = triDir
-          .map(d => spark.read.parquet(d).unionByName(cur))
+          .map(d => Readers.parquet(spark, d).unionByName(cur))
           .getOrElse(cur).distinct()
         merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
         cur.groupBy("segment", "nationkey").agg(count(lit(1)).as("n"))
@@ -936,7 +938,7 @@ object EventStream {
       // driver arithmetic over the configuration-scale histogram —
       // batch q96's exact integer rules
       val lDist = triDir.map { d =>
-        spark.read.parquet(d).groupBy("segment", "nationkey")
+        Readers.parquet(spark, d).groupBy("segment", "nationkey")
           .agg(count(lit(1)).as("l")).as[(String, Long, Long)].collect()
           .map { case (s, nk, l) => ((s, nk), l) }.toMap
       }.getOrElse(Map.empty[(String, Long), Long])
@@ -990,7 +992,7 @@ object EventStream {
       import spark.implicits._
       tokDir = Some(s"$stateDir/v$v")
       lastBatch = v
-      spark.read.parquet(s"$stateDir/lang_v$v")
+      Readers.parquet(spark, s"$stateDir/lang_v$v")
         .as[(String, Long)].collect()
         .foreach { case (l, n) => langCounts(l) = n }
     }
@@ -1008,7 +1010,7 @@ object EventStream {
           .filter(length(col("token")) > 0)
           .groupBy("lang", "token").agg(count(lit(1)).as("n"))
         val merged = tokDir match {
-          case Some(d) => spark.read.parquet(d).unionByName(batchTok)
+          case Some(d) => Readers.parquet(spark, d).unionByName(batchTok)
             .groupBy("lang", "token").agg(sum("n").as("n"))
           case None => batchTok
         }
@@ -1024,7 +1026,7 @@ object EventStream {
         lastBatch = batchId
       }
       val cov = graft.TrainingDataQueries.coverageFromTokenCounts(
-        spark.read.parquet(tokDir.get), "lang")
+        Readers.parquet(spark, tokDir.get), "lang")
       val out = graft.TrainingDataQueries
         .alphaMixFromLangCounts(langCounts.toSeq.toDF("lang", "n_docs"))
         .join(cov.select("lang", "p50_vocab", "p90_vocab", "p99_vocab",
@@ -1104,7 +1106,7 @@ object EventStream {
       var lastBatch = -1L
       val recover = stateDir.map(dir => recovery(dir) { (spark, v) =>
         import spark.implicits._
-        state = spark.read.parquet(s"$dir/v$v")
+        state = Readers.parquet(spark, s"$dir/v$v")
           .as[(String, String, Long)].collect()
           .map { case (k1, k2, n) => decode(k1, k2) -> n }.toMap
         lastBatch = v
@@ -1380,7 +1382,7 @@ object EventStream {
           val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val existing =
             if (fs.exists(target))
-              Some(spark.read.parquet(dir)
+              Some(Readers.parquet(spark, dir)
                 .filter(col("day").isin(touched: _*))
                 .select((allKeys :+ "cnt").map(col): _*))
             else None
@@ -1510,7 +1512,7 @@ object EventStream {
       val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(target)) {
         def window(pred: org.apache.spark.sql.Column, out: String): DataFrame =
-          spark.read.parquet(dir).filter(pred)
+          Readers.parquet(spark, dir).filter(pred)
             .groupBy(col("event_type"), col("v").as("cents"))
             .agg(sum("cnt").as(out))
         val c = window(col("day") <= refEnd, "o_ref")
@@ -1563,7 +1565,7 @@ object EventStream {
           val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val stored: Map[String, Seq[(String, Long)]] =
             if (fs.exists(target))
-              spark.read.parquet(dir)
+              Readers.parquet(spark, dir)
                 .filter(col("grp").isin(newBuf.keys.toSeq: _*))
                 .select(col("grp").cast(org.apache.spark.sql.types.StringType),
                   col("item"), col("cnt"))
@@ -1635,7 +1637,7 @@ object EventStream {
           val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val stored: Map[String, (Array[Byte], Long)] =
             if (fs.exists(target))
-              spark.read.parquet(dir)
+              Readers.parquet(spark, dir)
                 .filter(col("grp").isin(newRows.map(_._1).toSeq: _*))
                 .select(col("grp")
                   .cast(org.apache.spark.sql.types.StringType),
@@ -1726,7 +1728,7 @@ object EventStream {
           val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val stored =
             if (fs.exists(target)) {
-              val s = spark.read.parquet(dir)
+              val s = Readers.parquet(spark, dir)
                 .filter(col("grp").isin(touched: _*))
               val params = s.select("depth", "width").distinct()
                 .collect().map(r => (r.getInt(0), r.getInt(1)))

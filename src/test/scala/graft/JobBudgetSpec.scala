@@ -32,30 +32,32 @@ class JobBudgetSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  // the HITS rounds and the BPE merge loop run on the driver at this
-  // size (etl.SmallPath); the two parquet footer reads of d25 and the
-  // one of t18/t21 count too
-  private val budgets = Seq("d25_hits" -> 6, "t18_bpe_merges" -> 4, "t21_bpe_encode" -> 8)
+  // a warmed call (the second in the session), so a pin does not
+  // depend on which spec read a table first: every parquet read is
+  // then served with its memoized schema (sources.Readers.parquet),
+  // and the HITS rounds and the BPE merge loop run on the driver at
+  // this size (etl.SmallPath)
+  private val budgets = Seq("d25_hits" -> 4, "t18_bpe_merges" -> 3, "t21_bpe_encode" -> 7)
 
   for ((key, budget) <- budgets) test(s"$key runs at most $budget jobs") {
+    jobsOf(key)
     val n = jobsOf(key)
-    info(s"$key: $n jobs")
-    assert(n <= budget, s"$key ran $n jobs, budget $budget")
+    info(s"$key warm: $n jobs")
+    assert(n <= budget, s"$key's warm call ran $n jobs, budget $budget")
   }
 
   // s17's warm call serves the index the first call staged and sweeps
-  // it on the driver (AnnIndex.served, AnnIndex.probeSweep): three
-  // parquet footer reads (embeddings, the index's centroids and
-  // cells), the centroid and cell collects and the noop write, and
-  // every class it needs is still in Spark's codegen cache
-  test("s17_probe_sweep's warm call runs at most 6 jobs and 0 codegen compiles") {
+  // it on the driver (AnnIndex.served, AnnIndex.probeSweep): the
+  // centroid and cell collects and the noop write, with no footer
+  // read, and every class it needs is still in Spark's codegen cache
+  test("s17_probe_sweep's warm call runs at most 3 jobs and 0 codegen compiles") {
     jobsOf("s17_probe_sweep")
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val before = compiles.getCount
     val n = jobsOf("s17_probe_sweep")
     val compiled = compiles.getCount - before
     info(s"s17_probe_sweep warm: $n jobs, $compiled compiles")
-    assert(n <= 6, s"s17_probe_sweep's warm call ran $n jobs, budget 6")
+    assert(n <= 3, s"s17_probe_sweep's warm call ran $n jobs, budget 3")
     assert(compiled == 0,
       s"s17_probe_sweep's warm call compiled $compiled classes, budget 0")
   }

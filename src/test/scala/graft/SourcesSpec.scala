@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -720,5 +722,114 @@ class SourcesSpec extends AnyFunSuite {
     // re-export: same artifact, same manifest (idempotent swap)
     assert(Writers.writeShards(withText, dir) == ((nShards, nDocs)))
     assert(manifest() == mf, "re-export changed the manifest")
+  }
+
+  /** Spark jobs `body` starts, counted by a listener after a bus drain. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.TestBridge
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    TestBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; TestBridge.drainListenerBus(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("Readers.parquet: a warm read runs no job; a schema-less read runs its footer job") {
+    val dir = Files.createTempDirectory("graft_rd_warm").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$dir/t")
+    val cold = Readers.parquet(spark, s"$dir/t")
+    assert(jobsIn(spark.read.parquet(s"$dir/t")) >= 1,
+      "the counter must see the footer job of a schema-less read")
+    assert(jobsIn(Readers.parquet(spark, s"$dir/t")) == 0)
+    assert(Readers.parquet(spark, s"$dir/t").collect().toSeq == cold.collect().toSeq)
+  }
+
+  test("Readers.parquet sees a column added in place within the session, with no clear call") {
+    val dir = Files.createTempDirectory("graft_rd_addcol").toString
+    // a directory table overwritten by Spark (new part-file names)
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t")
+    Readers.parquet(spark, s"$dir/t"); Readers.parquet(spark, s"$dir/t")
+    Seq((1L, "a", 7L)).toDF("id", "s", "extra").write.mode(SaveMode.Overwrite)
+      .parquet(s"$dir/t")
+    val dirRead = Readers.parquet(spark, s"$dir/t")
+    assert(dirRead.columns.toSeq == Seq("id", "s", "extra"))
+    assert(dirRead.as[(Long, String, Long)].collect().toSeq == Seq((1L, "a", 7L)))
+    // a single-file table (the testdata layout) replaced under the
+    // same name, as a foreign writer does
+    val file = java.nio.file.Paths.get(s"$dir/one.parquet")
+    def writeFile(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
+      df.coalesce(1).write.parquet(s"$dir/$tag")
+      val part = new java.io.File(s"$dir/$tag").listFiles.find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeFile(Seq((1L, "a")).toDF("id", "s"), "v1")
+    Readers.parquet(spark, file.toString); Readers.parquet(spark, file.toString)
+    writeFile(Seq((1L, "a", 7L)).toDF("id", "s", "extra"), "v2")
+    val fileRead = Readers.parquet(spark, file.toString)
+    assert(fileRead.columns.toSeq == Seq("id", "s", "extra"))
+    assert(fileRead.as[(Long, String, Long)].collect().toSeq == Seq((1L, "a", 7L)))
+  }
+
+  test("Readers.parquet fails as spark.read.parquet does, on every call") {
+    val dir = Files.createTempDirectory("graft_rd_fail").toString
+    def sameFailure(path: String): Unit = {
+      val want = intercept[Exception](spark.read.parquet(path))
+      for (_ <- 1 to 2) {
+        val got = intercept[Exception](Readers.parquet(spark, path))
+        assert(got.getClass == want.getClass && got.getMessage == want.getMessage,
+          s"$path: got $got, want $want")
+      }
+    }
+    sameFailure(s"$dir/missing")
+    new java.io.File(s"$dir/empty").mkdirs()
+    new java.io.File(s"$dir/empty/_SUCCESS").createNewFile()
+    sameFailure(s"$dir/empty")
+    // a table read once, then emptied to its _SUCCESS: the memoized
+    // schema must not turn the failure into an empty frame
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t")
+    Readers.parquet(spark, s"$dir/t"); Readers.parquet(spark, s"$dir/t")
+    new java.io.File(s"$dir/t").listFiles.filter(_.getName.endsWith(".parquet"))
+      .foreach(_.delete())
+    sameFailure(s"$dir/t")
+    // and once deleted outright
+    val t = new org.apache.hadoop.fs.Path(s"$dir/t")
+    t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
+    sameFailure(s"$dir/t")
+  }
+
+  test("Readers.parquet's schema memo never holds more entries than its capacity") {
+    val dir = Files.createTempDirectory("graft_rd_cap").toString
+    Seq((1L, "a")).toDF("id", "s").coalesce(1).write.parquet(s"$dir/src")
+    val part = new java.io.File(s"$dir/src").listFiles.find(_.getName.endsWith(".parquet")).get
+    val cap = Readers.SchemaMemoCapacity
+    for (i <- 0 until cap + 8) {
+      val f = java.nio.file.Paths.get(s"$dir/t$i.parquet")
+      Files.copy(part.toPath, f)
+      assert(Readers.parquet(spark, f.toString).count() == 1)
+      assert(Readers.schemaMemoSize <= cap, s"memo holds ${Readers.schemaMemoSize} > $cap")
+    }
+    assert(Readers.schemaMemoSize == cap)
+  }
+
+  test("src/main has no schema-less parquet read outside Readers (source guard)") {
+    // every schema-less parquet read goes through Readers.parquet, the
+    // one that infers a schema once per file snapshot
+    val schemaLess = """\.read\s*\.(parquet\(|format\("parquet"\))""".r
+    val files = {
+      val it = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try it.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally it.close()
+    }
+    assert(files.nonEmpty)
+    val offenders = files.filterNot(_.getFileName.toString == "Readers.scala").filter { f =>
+      schemaLess.findFirstIn(new String(Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)).isDefined
+    }
+    assert(offenders.isEmpty, s"schema-less parquet reads in ${offenders.mkString(", ")}")
   }
 }

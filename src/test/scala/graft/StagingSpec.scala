@@ -14,16 +14,20 @@ import org.scalatest.funsuite.AnyFunSuite
 class StagingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** The committed directory of a per-JVM shared stage over `source`. */
+  private def staged(source: String, name: String): File =
+    new File(StageRoots.rootFor(TestSpark.Sf),
+      etl.Stages.sharedName(spark, TestSpark.Sf, source, name))
+
   test("t23 split consumes the staged cluster artifact; d06 reuses it") {
     StageRoots.reset()
     val split = TrainingDataQueries.t23LeakageSafeSplit(spark, TestSpark.Sf)
     val rows = split.collect()
     assert(rows.length == 500)
 
-    val root = StageRoots.rootFor(TestSpark.Sf)
-    assert(new File(s"$root/neardup_pairs/_SUCCESS").exists,
+    assert(new File(staged("documents", "neardup_pairs"), "_SUCCESS").exists,
       "pair graph not staged")
-    assert(new File(s"$root/dedup_clusters/_SUCCESS").exists,
+    assert(new File(staged("documents", "dedup_clusters"), "_SUCCESS").exists,
       "cluster table not staged")
 
     // constructing t23 again (or d06, d15) must read ONLY the staged
@@ -50,7 +54,7 @@ class StagingSpec extends AnyFunSuite {
 
   test("q112/q114 drift-panel histogram is staged: second read serves the committed artifact without rewrite") {
     val ks1 = AnalyticsQueries.q112KsFromArtifacts(spark, TestSpark.Sf).collect()
-    val art = new File(s"${StageRoots.rootFor(TestSpark.Sf)}/ks_hists")
+    val art = staged("events", "ks_hists")
     assert(new File(art, "_SUCCESS").exists, "histogram artifact not staged")
     def listing(f: File): Set[(String, Long)] = {
       def walk(x: File): Seq[File] =
@@ -111,10 +115,29 @@ class StagingSpec extends AnyFunSuite {
 
   test("reset() isolates runs — a fresh root rebuilds from scratch") {
     StageRoots.reset()
-    val root = StageRoots.rootFor(TestSpark.Sf)
-    assert(!new File(s"$root/neardup_pairs/_SUCCESS").exists)
+    val pairs = new File(staged("documents", "neardup_pairs"), "_SUCCESS")
+    assert(!pairs.exists)
     // first consumer after reset triggers a fresh build at the new root
     LlmQueries.d04NgramJaccard(spark, TestSpark.Sf).limit(1).collect()
-    assert(new File(s"$root/neardup_pairs/_SUCCESS").exists)
+    assert(pairs.exists)
+  }
+
+  test("a shared stage rebuilds when its source table is rewritten in place, with no reset") {
+    import java.nio.file.{Files, StandardCopyOption}
+    import org.apache.spark.sql.functions.col
+    val copy = Files.createTempDirectory("graft_shared_rewrite")
+    new File(TestSpark.Sf).listFiles.foreach(f =>
+      Files.copy(f.toPath, copy.resolve(f.getName)))
+    val dir = copy.toString
+    assert(LlmQueries.knnGraphFrame(spark, dir).count() == 2500)
+    // rewrite embeddings.parquet in place without a third of its rows
+    val rewrite = copy.resolve("rewrite").toString
+    Tables.embeddings(spark, dir).filter(col("vec_id") % 3 =!= 0)
+      .coalesce(1).write.parquet(rewrite)
+    val part = new File(rewrite).listFiles.find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, copy.resolve("embeddings.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    assert(LlmQueries.knnGraphFrame(spark, dir).count() == 1665,
+      "the k-NN graph of the old embeddings was served")
   }
 }

@@ -51,6 +51,35 @@ class TablesSpec extends AnyFunSuite {
 
   private lazy val all = Seq("nanos-long" -> longDir, "ntz" -> ntzDir, "ltz" -> ltzDir)
 
+  test("Readers.parquet reads with spark.read.parquet's schema and plan: the ten tables, an ANN cells directory, a partition column its files store and every ts encoding") {
+    import graft.sources.Readers
+    val annDir = Files.createTempDirectory("graft-tables-cells").toString
+    graft.sim.AnnIndex.build(Tables.embeddings(spark, TestSpark.Sf).select(
+        col("vec_id").as("id"),
+        graft.functions.VectorFunctions.toDouble(col("embedding")).as("vec")),
+      nCells = 23, seed = 42L, annDir)
+    // a partition column its files also store, ahead of the data columns
+    val overlap = Files.createTempDirectory("graft-tables-overlap").toString
+    spark.range(3).select(lit(7L).as("day"), col("id"))
+      .coalesce(1).write.parquet(s"$overlap/t/day=7")
+    val paths = Tables.names.map(Tables.path(TestSpark.Sf, _)) ++
+      Seq(s"$annDir/cells", s"$overlap/t") ++
+      all.map { case (_, dir) => Tables.path(dir, "events") }
+    paths.foreach { p =>
+      val want = spark.read.parquet(p)
+      // the first call may infer; the second serves the memoized schema
+      Seq(Readers.parquet(spark, p), Readers.parquet(spark, p)).foreach { got =>
+        assert(got.schema == want.schema, s"$p: ${got.schema} vs ${want.schema}")
+        assert(got.queryExecution.optimizedPlan.canonicalized ==
+          want.queryExecution.optimizedPlan.canonicalized,
+          s"$p plans differ:\n${got.queryExecution.optimizedPlan}\n" +
+            s"${want.queryExecution.optimizedPlan}")
+      }
+    }
+    assert(spark.read.parquet(s"$annDir/cells").schema.fieldNames.last == "cell",
+      "the cells directory is partitioned by cell")
+  }
+
   test("Tables.events normalizes every ts encoding to TimestampType") {
     all.foreach { case (tag, dir) =>
       val dt = Tables.events(spark, dir).schema("ts").dataType
